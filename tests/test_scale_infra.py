@@ -797,6 +797,53 @@ def test_lsh_probe_and_band_caps_bound_pathological_buckets(spark):
     assert free > len(mp)
 
 
+def test_lsh_family_ignores_null_embeddings(spark, monkeypatch):
+    """A NULL embedding has no signature: on every LSH path — the
+    full and the masked multiprobe rule, banding, exact collision with
+    the HOF and with the BLAS verify tail — it yields no pair and no
+    error, and the pairs of the other rows are exactly those of the
+    corpus without it (the SQL oracles drop such rows)."""
+    import random
+
+    from weather4cast_bigdata_spark.operators import similarity
+
+    rng = random.Random(61)
+    dim = 8
+    centers = [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(6)]
+    rows = [
+        (i, [c + rng.gauss(0, 0.05) for c in centers[i % 6]]) for i in range(120)
+    ]
+    schema = "vec_id bigint, embedding array<double>"
+    clean = spark.createDataFrame(rows, schema)
+    dirty = spark.createDataFrame(rows + [(900, None), (901, None)], schema)
+    s5, s8 = similarity.hyperplane_signs(5, dim), similarity.hyperplane_signs(8, dim)
+    paths = {
+        "multiprobe": lambda d: similarity.near_dup_pairs_multiprobe(
+            d, s5, threshold=0.5, prefix_planes=4, split_r=1
+        ),
+        "multiprobe_masked": lambda d: similarity.near_dup_pairs_multiprobe(
+            d, s5, threshold=0.5, prefix_planes=4, split_r=1, n_probes=2
+        ),
+        "banded": lambda d: similarity.near_dup_pairs_banded(
+            d, s8, n_bands=4, threshold=0.5
+        ),
+        "hyperplane": lambda d: similarity.near_dup_pairs_hyperplane(
+            d, threshold=0.5, dim=dim, target_bucket=8, n_rows=120
+        ),
+    }
+
+    def pairs(fn, d):
+        return {(r["a_id"], r["b_id"], r["cos_sim"]) for r in fn(d).collect()}
+
+    for name, fn in paths.items():
+        want = pairs(fn, clean)
+        assert want and pairs(fn, dirty) == want, name
+    # the BLAS verify tail (hyperplane past ARROW_SIGNATURE_MIN_ROWS)
+    want = pairs(paths["hyperplane"], clean)
+    monkeypatch.setattr(similarity, "ARROW_SIGNATURE_MIN_ROWS", 1)
+    assert pairs(paths["hyperplane"], dirty) == want
+
+
 def test_fractional_split_flattens_depth_sawtooth():
     """The (p, r) mixture must hold EXPECTED bucket depth within a
     ~±19% band of target at every corpus size — the flattened
@@ -925,7 +972,9 @@ def test_fractional_exact_key_matches_brute_force(spark, r):
     vecs = [(i, [rng.gauss(0, 1) for _ in range(dim)]) for i in range(120)]
     df = spark.createDataFrame(vecs, ["vec_id", "embedding"])
     key = similarity.fractional_key(
-        similarity.hyperplane_bucket(F.col("embedding"), signs), p, r
+        F.element_at(similarity.hyperplane_bucket_words(F.col("embedding"), signs), 1),
+        p,
+        r,
     )
     bucketed = df.select("vec_id", "embedding", key.alias("hp_bucket"))
     got = {
@@ -1031,69 +1080,91 @@ def test_multiprobe_split_bounds_work_per_row():
             assert work >= t * 0.7, (n, p, r, depth, work)
 
 
-def test_hyperplane_bucket_arrow_matches_expression(spark):
-    """The Arrow-vectorized signature kernel must produce the SAME
-    bucket as the declarative higher-order-function form (the form
-    the SQL oracle textually mirrors) for every vector — including
-    near-zero dot products where the +1e-9 nudge decides the sign,
-    and the zero-plane degenerate. numpy's reassociated summation is
-    inside the nudge's tolerance by design; this is the pin."""
+def _reference_signature(vec, signs, probe):
+    """Reference signature of one row, computed outside Spark:
+    missing dimensions count 0 (NULL elements too), extra ones are
+    ignored, a NULL row has none; words of 60 planes, then the probe
+    mask when asked."""
+    import numpy as np
+
+    if vec is None:
+        return None
+    if not signs:
+        return [0]
+    s = np.asarray(signs, dtype=np.float64)
+    x = np.zeros(s.shape[1])
+    row = [0.0 if e is None else e for e in vec[: s.shape[1]]]
+    x[: len(row)] = row
+    dots = s @ x
+    wb = 60
+    words = [
+        sum(1 << (p - w * wb) for p in range(w * wb, min(len(signs), (w + 1) * wb))
+            if dots[p] + 1e-9 >= 0)
+        for w in range(max(1, -(-len(signs) // wb)))
+    ]
+    if probe:
+        planes, t = probe
+        key = np.floor((np.abs(dots[:planes]) + 1e-9) * 1e6 + 0.5)
+        words.append(sum(1 << int(j) for j in np.argsort(key, kind="stable")[:t]))
+    return words
+
+
+@pytest.mark.parametrize(
+    "n_planes,probe",
+    [
+        (9, None),  # one word
+        (60, None),  # exactly one full word
+        (70, None),  # two words, the second partial
+        (125, None),  # three words
+        (0, None),  # no planes: the single word 0
+        (9, (7, 3)),  # probe mask over the 7 prefix planes
+    ],
+    ids=["1word", "60planes", "2words", "3words", "noplanes", "probe"],
+)
+def test_signature_kernels_agree(spark, n_planes, probe):
+    """The numpy signature kernel and the expression form must give
+    the SAME words for every row, and both must equal a reference
+    computed outside Spark — including near-zero dots where the +1e-9
+    nudge decides the sign (numpy's reassociated summation stays
+    inside the nudge), rows shorter or longer than the planes (missing
+    dimensions count 0, as in the SQL oracles), a NULL element, and a
+    NULL row (NULL signature, no error). With a probe the kernel appends the mask of
+    the nearest prefix planes, checked against the same reference."""
     import random
 
     from weather4cast_bigdata_spark.operators import similarity
 
-    rng = random.Random(42)
+    rng = random.Random(42 + n_planes)
     dim = 16
-    signs = similarity.hyperplane_signs(9, dim)
+    signs = similarity.hyperplane_signs(n_planes, dim)
     rows = [(i, [rng.gauss(0, 1) for _ in range(dim)]) for i in range(300)]
     # adversarial near-orthogonal rows: tiny components, sums near 0
     rows += [(1000 + i, [rng.gauss(0, 1e-12) for _ in range(dim)]) for i in range(50)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    both = df.select(
-        "vec_id",
-        similarity.hyperplane_bucket(F.col("embedding"), signs).alias("he"),
-        similarity.hyperplane_bucket_arrow(F.col("embedding"), signs).alias("ha"),
-    )
-    bad = both.where(F.col("he") != F.col("ha")).count()
-    assert bad == 0
-    assert (
-        df.select(similarity.hyperplane_bucket_arrow(F.col("embedding"), []).alias("h"))
-        .where(F.col("h") != 0)
-        .count()
-        == 0
-    )
-
-
-def test_hyperplane_bucket_words_arrow_matches_expression(spark):
-    """The multi-word Arrow signature kernel (the r9 extension past
-    the one-bigint 60-plane cap) must produce the SAME word values as
-    the declarative per-word expression form for every vector — at
-    the production word size (70 planes → two words) AND at a small
-    word size (word_bits=8 → 9 words) that forces every straddle and
-    tail-width case through both kernels."""
-    import random
-
-    from weather4cast_bigdata_spark.operators import similarity
-
-    rng = random.Random(7)
-    dim = 16
-    signs = similarity.hyperplane_signs(70, dim)
-    rows = [(i, [rng.gauss(0, 1) for _ in range(dim)]) for i in range(200)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    for wb in (similarity.SIGNATURE_WORD_BITS, 8):
-        both = df.select(
-            similarity.hyperplane_bucket_words(
-                F.col("embedding"), signs, word_bits=wb
-            ).alias("we"),
+    rows += [
+        (2000, [1.0]),
+        (2001, [-1.0]),
+        (2002, [rng.gauss(0, 1) for _ in range(dim // 2)]),
+        (2003, [rng.gauss(0, 1) for _ in range(dim + 3)]),
+        (2004, [1.0, None] + [rng.gauss(0, 1) for _ in range(dim - 2)]),
+        (2005, None),
+    ]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    got = {
+        r["vec_id"]: (r["we"], r["wa"])
+        for r in df.select(
+            "vec_id",
+            similarity.hyperplane_bucket_words(F.col("embedding"), signs).alias("we"),
             similarity.hyperplane_bucket_words_arrow(
-                F.col("embedding"), signs, word_bits=wb
+                F.col("embedding"), signs, probe
             ).alias("wa"),
-        )
-        assert both.where(F.col("we") != F.col("wa")).count() == 0
-        n_words = similarity.signature_n_words(70, wb)
-        assert (
-            both.where(F.size("wa") != F.lit(n_words)).count() == 0
-        )
+        ).collect()
+    }
+    n_words = similarity.signature_n_words(n_planes)
+    for vid, vec in rows:
+        want = _reference_signature(vec, signs, probe)
+        we, wa = got[vid]
+        assert wa == want, (vid, wa, want)
+        assert we == (None if want is None else want[:n_words]), (vid, we, want)
 
 
 def test_band_key_words_matches_python_slice(spark):
@@ -1267,36 +1338,77 @@ def test_hyperplane_verify_paths_identical(spark, monkeypatch):
     assert hof == blas and len(hof) > 0
 
 
-def test_bounded_multiprobe_equals_unbounded_when_mask_covers(spark):
-    """With n_probes >= prefix_planes every prefix flip is masked in,
-    so the bounded operator must emit EXACTLY near_dup_pairs_multiprobe's
-    pairs — the gate-SF regime (p <= 8 at sf0.01/0.1), and the pin
-    that the mask machinery changes nothing except which flips are
-    probed."""
+def _masked_rule_pairs(side, p, r):
+    """Masked multiprobe rule computed outside Spark, over
+    {id: (hp, mask)}: a d = 1 pair qualifies iff the differing plane
+    is in A's mask and (merged_b or ext_a = ext_b), or symmetrically —
+    with full masks exactly the full rule (merged_a or merged_b or
+    ext_a = ext_b)."""
+    pm_full = (1 << p) - 1
+    want = set()
+    for a in sorted(side):
+        for b in sorted(side):
+            if a >= b:
+                continue
+            ha, ma = side[a]
+            hb, mb = side[b]
+            pa, pb = ha & pm_full, hb & pm_full
+            ea, eb = (ha >> p) & 1, (hb >> p) & 1
+            mga, mgb = (pa % 4) >= r, (pb % 4) >= r
+            x = pa ^ pb
+            if x == 0:
+                want.add((a, b))
+            elif bin(x).count("1") == 1:
+                if (x & ma == x and (mgb or ea == eb)) or (
+                    x & mb == x and (mga or ea == eb)
+                ):
+                    want.add((a, b))
+    return want
+
+
+@pytest.mark.parametrize(
+    "p,r,n_probes",
+    [(5, 0, 5), (6, 2, 8), (6, 1, None), (10, 2, None)],
+    ids=["p5-budget5", "p6-budget8", "p6-default", "p10-default"],
+)
+def test_multiprobe_rule_follows_probe_budget(spark, p, r, n_probes):
+    """near_dup_pairs_multiprobe runs the full rule while p <= n_probes
+    (default MULTIPROBE_BOUNDED_FANOUT = 8) and the masked rule past
+    it: at p <= n_probes its candidates must equal the masked rule
+    with FULL masks — the full rule, which is why one oracle covers
+    both regimes — and at p > n_probes the masked rule with the
+    kernel's n_probes-nearest masks, which must drop some of the full
+    rule's pairs."""
     import random
 
     from weather4cast_bigdata_spark.operators import similarity
 
-    rng = random.Random(37)
+    rng = random.Random(53 + p + r)
     dim = 16
-    rows = [(i, [rng.gauss(0, 1) for _ in range(dim)]) for i in range(300)]
+    rows = [(i, [rng.gauss(0, 1) for _ in range(dim)]) for i in range(280)]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    for p, r in ((5, 0), (6, 2)):
-        signs = similarity.hyperplane_signs(p + 1, dim)
-        unb = {
-            (x["a_id"], x["b_id"], x["cos_sim"])
-            for x in similarity.near_dup_pairs_multiprobe(
-                df, signs, threshold=0.2, prefix_planes=p, split_r=r
-            ).collect()
-        }
-        bnd = {
-            (x["a_id"], x["b_id"], x["cos_sim"])
-            for x in similarity.near_dup_pairs_multiprobe_bounded(
-                df, signs, prefix_planes=p, split_r=r, threshold=0.2,
-                n_probes=p,
-            ).collect()
-        }
-        assert bnd == unb and len(unb) > 0, (p, r)
+    signs = similarity.hyperplane_signs(p + 1, dim)
+    t = similarity.MULTIPROBE_BOUNDED_FANOUT if n_probes is None else n_probes
+    kw = {} if n_probes is None else {"n_probes": n_probes}
+    got = {
+        (x["a_id"], x["b_id"])
+        for x in similarity.near_dup_pairs_multiprobe(
+            df, signs, prefix_planes=p, split_r=r, threshold=-1.0, **kw
+        ).collect()
+    }
+    sig = similarity.hyperplane_bucket_words_arrow(
+        F.col("embedding"), signs, probe=(p, t)
+    )
+    side = {
+        x["vec_id"]: (x["s"][0], x["s"][1])
+        for x in df.select("vec_id", sig.alias("s")).collect()
+    }
+    full = _masked_rule_pairs(
+        {k: (hp, (1 << p) - 1) for k, (hp, _) in side.items()}, p, r
+    )
+    want = _masked_rule_pairs(side, p, r) if p > t else full
+    assert got == want and len(want) > 0, (p, r, t, len(got ^ want))
+    assert (want < full) == (p > t)
 
 
 def test_bounded_multiprobe_matches_python_reference(spark):
@@ -1318,44 +1430,26 @@ def test_bounded_multiprobe_matches_python_reference(spark):
     signs = similarity.hyperplane_signs(p + 1, dim)
     rows = [(i, [rng.gauss(0, 1) for _ in range(dim)]) for i in range(260)]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    sp = similarity.hyperplane_bucket_probe_arrow(
-        F.col("embedding"), signs, p, t
+    sig = similarity.hyperplane_bucket_words_arrow(
+        F.col("embedding"), signs, probe=(p, t)
     )
     side = {
-        x["vec_id"]: (x["sp"]["hp"], x["sp"]["probe_mask"])
-        for x in df.select("vec_id", sp.alias("sp")).collect()
+        x["vec_id"]: (x["s"][0], x["s"][1])
+        for x in df.select("vec_id", sig.alias("s")).collect()
     }
+    full = _masked_rule_pairs(
+        {k: (hp, (1 << p) - 1) for k, (hp, _) in side.items()}, p, r
+    )
     got = {
         (x["a_id"], x["b_id"])
-        for x in similarity.near_dup_pairs_multiprobe_bounded(
+        for x in similarity.near_dup_pairs_multiprobe(
             df, signs, prefix_planes=p, split_r=r, threshold=-1.0,
             n_probes=t,
         ).collect()
     }
-    pm_full = (1 << p) - 1
-    want = set()
-    excluded_d1 = 0
-    for a in sorted(side):
-        for b in sorted(side):
-            if a >= b:
-                continue
-            ha, ma = side[a]
-            hb, mb = side[b]
-            pa, pb = ha & pm_full, hb & pm_full
-            ea, eb = (ha >> p) & 1, (hb >> p) & 1
-            mga, mgb = (pa % 4) >= r, (pb % 4) >= r
-            x = pa ^ pb
-            if x == 0:
-                want.add((a, b))
-            elif bin(x).count("1") == 1:
-                if (x & ma == x and (mgb or ea == eb)) or (
-                    x & mb == x and (mga or ea == eb)
-                ):
-                    want.add((a, b))
-                else:
-                    excluded_d1 += 1
+    want = _masked_rule_pairs(side, p, r)
     assert got == want and len(want) > 0
-    assert excluded_d1 > 0, "fixture too small: the bound never bound"
+    assert want < full, "fixture too small: the bound never bound"
 
 
 def test_table_rows_matches_spark_count(spark, sf_dir):
@@ -1378,51 +1472,6 @@ def test_table_rows_matches_spark_count(spark, sf_dir):
         # a missing table must still raise (both branches fail) —
         # the helper must not silently invent a count
         catalog.table_rows(spark, sf_dir, "no_such_table")
-
-
-def test_multiprobe_auto_gate_dispatch(spark):
-    """The size-gated default (VERDICT r9 item 1): at p <= 8 the
-    auto form emits exactly the full-prefix rule's pairs; at p > 8
-    exactly the bounded-T=8 rule's pairs — so probe rows/input row
-    is bounded by 10 at every corpus size while gate-SF results are
-    unchanged."""
-    import random
-
-    from weather4cast_bigdata_spark.operators import similarity
-
-    rng = random.Random(53)
-    dim = 16
-    rows = [(i, [rng.gauss(0, 1) for _ in range(dim)]) for i in range(280)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-    def pairs(d):
-        return {(x["a_id"], x["b_id"], x["cos_sim"]) for x in d.collect()}
-
-    # below the gate: identical to the full-prefix operator
-    p, r = 6, 1
-    signs = similarity.hyperplane_signs(p + 1, dim)
-    assert pairs(
-        similarity.near_dup_pairs_multiprobe_auto(
-            df, signs, prefix_planes=p, split_r=r, threshold=0.2
-        )
-    ) == pairs(
-        similarity.near_dup_pairs_multiprobe(
-            df, signs, threshold=0.2, prefix_planes=p, split_r=r
-        )
-    )
-    # past the gate: identical to the bounded-T operator
-    p, r = 10, 2
-    signs = similarity.hyperplane_signs(p + 1, dim)
-    assert pairs(
-        similarity.near_dup_pairs_multiprobe_auto(
-            df, signs, prefix_planes=p, split_r=r, threshold=0.2
-        )
-    ) == pairs(
-        similarity.near_dup_pairs_multiprobe_bounded(
-            df, signs, prefix_planes=p, split_r=r, threshold=0.2,
-            n_probes=similarity.MULTIPROBE_BOUNDED_FANOUT,
-        )
-    )
 
 
 def test_probe_arrow_tie_heavy_rank_is_quantized_half_up(spark):
@@ -1459,12 +1508,12 @@ def test_probe_arrow_tie_heavy_rank_is_quantized_half_up(spark):
         rows.append((i, v))
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     p, t = 5, 2
-    sp = similarity.hyperplane_bucket_probe_arrow(
-        F.col("embedding"), signs, p, t
+    sig = similarity.hyperplane_bucket_words_arrow(
+        F.col("embedding"), signs, probe=(p, t)
     )
     got = {
-        x["vec_id"]: x["sp"]["probe_mask"]
-        for x in df.select("vec_id", sp.alias("sp")).collect()
+        x["vec_id"]: x["s"][-1]
+        for x in df.select("vec_id", sig.alias("s")).collect()
     }
     s_t = np.asarray(signs, dtype=np.float64).T
     for vid, vec in rows:

@@ -103,10 +103,11 @@ def run(spark, docs, lake: str, max_df: int | None):
     # clusters multiply identical-signature pairs ×100 — wider
     # signatures (bits) are the production knob that shrinks block
     # buckets; 48 bits (16-bit blocks, 65k bucket values) here vs the
-    # registry's demo 24 shows the lever at corpus scale.
+    # registry's demo 24 shows the lever at corpus scale (past 32 bits
+    # the token hash must be the 60-bit source).
     probe(
         "simhash_hamming_pairs",
-        lambda: dedup.simhash_near_pairs(docs, bits=48, k=2),
+        lambda: dedup.simhash_near_pairs(docs, bits=48, k=2, hash_bits=60),
     )
     # r5 skew guards under the adversarial lake: the bucket CAP bounds
     # the simhash stage even at the demo 24-bit width (clone buckets

@@ -1,8 +1,7 @@
 """Array / vector column functions.
 
-Raster math from the reference (stack/slice/flatten —
-``datasets.py:102,110,162``, ``ensemble.py:28``) plus the vector
-primitives the similarity-search extension needs. All JVM-side
+The raster flatten from the reference (``ensemble.py:28``) plus
+the vector primitives the similarity-search extension needs. All JVM-side
 higher-order functions — no Python in the hot path.
 """
 
@@ -36,16 +35,6 @@ def cosine(a: Column, b: Column) -> Column:
 def to_double_array(a: Column) -> Column:
     """array<float> → array<double> (match DuckDB DOUBLE math exactly)."""
     return F.transform(a, lambda x: x.cast("double"))
-
-
-def slice_1d(a: Column, start: int, length: int) -> Column:
-    """1-based slice — the crop primitive. Reference: datasets.py:102."""
-    return F.slice(a, start, length)
-
-
-def stack_channels(*cols: Column) -> Column:
-    """``np.stack(..., axis=-1)`` analog. Reference: datasets.py:110,162."""
-    return F.array(*cols)
 
 
 def flatten_to_rows(df, array_col: str, id_cols: list[str], pos_name: str = "idx", val_name: str = "val"):

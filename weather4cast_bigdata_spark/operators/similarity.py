@@ -4,8 +4,9 @@ Brute-force cosine top-k as the correctness baseline, plus a
 partition-pruned (IVF-style) variant as the scale path: with a coarse
 bucket assignment column, the search join only touches same-bucket
 rows — at 100 TB that's the difference between an O(n·q) cross join
-and bucket-local probes. All vector math is JVM higher-order
-functions (zip_with/aggregate) — no Python in the loop.
+and bucket-local probes. Vector math is JVM higher-order functions
+(zip_with/aggregate) by default; past a corpus-size gate the LSH
+signature and the near-dup verify run numpy over Arrow batches.
 """
 
 from __future__ import annotations
@@ -20,13 +21,13 @@ from weather4cast_bigdata_spark.partitioning import ensure_scan_parallelism
 
 
 def _scored(queries: DataFrame, corpus: DataFrame, id_col: str, vec_col: str, on=None) -> DataFrame:
-    # Norms are attached PER VECTOR before the pairing join (r10):
+    # Norms are attached PER VECTOR before the pairing join:
     # computing cosine(qv, cv) per pair re-folds norm(qv)/norm(cv)
     # for every pair a vector appears in — 3 HOF folds per pair where
-    # 1 suffices. The per-pair expression is now one dot fold + a
+    # 1 suffices. The per-pair expression is one dot fold + a
     # multiply/divide over the carried norms; values are bit-identical
-    # (same fold on the same input, IEEE ops in the same order), so
-    # every recorded oracle hash is unchanged.
+    # to the per-pair form (same fold on the same input, IEEE ops in
+    # the same order).
     q = queries.select(
         F.col(id_col).alias("query_id"),
         to_double_array(F.col(vec_col)).alias("qv"),
@@ -153,24 +154,23 @@ def adaptive_n_planes_sql(
     return f"(SELECT {base} + {terms} FROM (SELECT ({count_sql}) AS c))"
 
 
-#: Planes carried per bigint word of a WIDE signature. A single
-#: bigint key holds ≤60 sign bits; wider signatures (the banded
+#: Planes carried per bigint word of a signature. A single bigint
+#: key holds ≤60 sign bits; wider signatures (the banded
 #: construction's total plane count past ~8·2^14.75 rows) split into
 #: ceil(P / 60) words — see hyperplane_bucket_words /
 #: band_key_words. 60 (not 62) leaves shift arithmetic comfortably
 #: inside the sign bit on both engines.
 SIGNATURE_WORD_BITS = 60
 
-#: Cap of the fractional (1/4-step) plane chains. r8's cap was 60 —
-#: one bigint word — and measured as the REAL binding constraint at
-#: the 100× lake (SCALING.md §7c: sim_lsh_multiprobe's chain wanted
-#: depth 80/17 ≈ 4.7 at 200 k vectors but clamped at Q=60, work/row
-#: growing by the uncompensated probe fan-out, 12.8× wall per
-#: decade). 120 quarter-steps = two words for the banded
-#: construction (its total plane count is Q) and still ONE word for
-#: the single-signature keys (they read only Q//4 + 1 ≤ 31 planes),
-#: covering ~8·2^29.75 ≈ 7×10⁹ rows per band at target 8 before the
-#: cap binds again.
+#: Cap of the fractional (1/4-step) plane chains. A cap of 60 — one
+#: bigint word — was measured binding at 200 k vectors
+#: (sim_lsh_multiprobe's chain wanted depth 80/17 ≈ 4.7 but clamped
+#: at Q=60, work/row growing by the uncompensated probe fan-out,
+#: 12.8× wall per decade). 120 quarter-steps = two words for the
+#: banded construction (its total plane count is Q) and still ONE
+#: word for the single-signature keys (they read only Q//4 + 1 ≤ 31
+#: planes), covering ~8·2^29.75 ≈ 7×10⁹ rows per band at target 8
+#: before the cap binds again.
 MAX_QUARTER_STEPS = 120
 
 
@@ -200,13 +200,11 @@ def adaptive_total_planes(
     n > target·2^((k-1)/n_bands)}; with :func:`band_layout`
     splitting Q into widths W/W+1, the geometric-mean band depth
     stays within 2^(1/n_bands) of target at ANY corpus size — the
-    flattened version of the ±2× sawtooth SCALING.md §7 documents
-    for the integral variants. max_total = MAX_QUARTER_STEPS (120,
-    raised from one bigint word's 60 in r9): the banded
-    construction's Q-plane signature spans ceil(Q/60) bigint words
+    flattened version of the integral variants' ±2× sawtooth.
+    max_total = MAX_QUARTER_STEPS (120): the banded construction's
+    Q-plane signature spans ceil(Q/60) bigint words
     (hyperplane_bucket_words) while the single-signature keys read
-    only Q//4 + 1 ≤ 31 planes — always word 0. The 60 cap was
-    measured binding at the 100× lake (SCALING.md §7c)."""
+    only Q//4 + 1 ≤ 31 planes — always word 0."""
     q = 0
     for t in _fractional_thresholds(n_bands, target_bucket, max_total):
         if n > t:
@@ -224,8 +222,7 @@ def adaptive_total_planes_sql(
     subquery over the same corpus count. The sum is CHUNKED into
     parenthesized groups of 32: integer addition is associative, and
     a flat 120-term left-nested chain exceeds DuckDB's 128-deep
-    expression-binder recursion limit (the r9 cap raise tripped
-    it)."""
+    expression-binder recursion limit."""
     terms = [
         f"(CASE WHEN c > {t} THEN 1 ELSE 0 END)"
         for t in _fractional_thresholds(n_bands, target_bucket, max_total)
@@ -241,9 +238,9 @@ def fractional_split(
     n: int, n_bands: int = 4, target_bucket: int = 8, max_total: int = MAX_QUARTER_STEPS
 ) -> tuple[int, int]:
     """Fractional resolution for the SINGLE-SIGNATURE constructions
-    (exact-collision and multiprobe) — the r7 weak-flag port: derive
-    the 1/4-step total Q from :func:`adaptive_total_planes` and split
-    it as ``(p, r) = (Q // 4, Q % 4)``. The signature reads ``p + 1``
+    (exact-collision and multiprobe): derive the 1/4-step total Q
+    from :func:`adaptive_total_planes` and split it as
+    ``(p, r) = (Q // 4, Q % 4)``. The signature reads ``p + 1``
     planes; ``p`` low bits form the bucket PREFIX and bit ``p`` is an
     EXTENSION bit that only the ``r/4`` fraction of prefixes selected
     by ``prefix % 4 < r`` actually key on (see
@@ -251,8 +248,8 @@ def fractional_split(
     increments Q by one, moving only ``r`` — i.e. splitting one more
     quarter of the buckets in two — so E[bucket depth] steps by
     ~2^(1/4) ≈ 1.19× instead of the integral chain's 2× sawtooth
-    (SCALING.md §7; measured 3.21×/4.07× wall at 3× data for the
-    integral variants vs 2.35× for the fractional banded sibling).
+    (measured 3.21×/4.07× wall at 3× data for the integral variants
+    vs 2.35× for the fractional banded sibling).
 
     ``prefix % 4`` (the signs of planes 0 and 1) is the split
     selector because it is a pure function of the bucket id that both
@@ -275,8 +272,8 @@ def fractional_split(
 #: the bench SF (n=2000 → (8, 0) either way) and gets gently FINER
 #: beyond it (depth 6.1 at 20 k, 5.5 at 60 k) — constant probe work
 #: per row, paid in the recall knob, which stays above the integral
-#: r7 rule at every measured scale (its over-resolved chain ran
-#: depth 4.9 at 20 k; see SCALING.md §7b).
+#: rule at every measured scale (its over-resolved chain ran depth
+#: 4.9 at 20 k).
 MULTIPROBE_WORK_TARGET = 80
 
 
@@ -396,42 +393,39 @@ def hyperplane_signs(n_planes: int, dim: int) -> list[list[int]]:
     ]
 
 
-def hyperplane_bucket(vec_col: Column, signs) -> Column:
-    """Random-hyperplane LSH bucket (SimHash for embeddings): bit p =
-    [⟨v, s_p⟩ ≥ 0], composed into one integer. Cosine-similar vectors
-    collide with probability (1 - θ/π)^P — the textbook complement to
-    IVF bucketing. Pure JVM higher-order expressions; the +1e-9 nudge
-    keeps the sign decision identical cross-engine when a dot product
-    lands within float noise of zero (numeric policy #3).
+def hyperplane_bucket_words(vec_col: Column, signs) -> Column:
+    """Random-hyperplane LSH signature (SimHash for embeddings),
+    expression form: bit p = [⟨v, s_p⟩ + 1e-9 ≥ 0], packed
+    :data:`SIGNATURE_WORD_BITS` planes per bigint word, so a P-plane
+    signature is an array of ceil(P/60) words (one word, 0, for no
+    planes). Two vectors at angle θ agree on a plane with probability
+    1 - θ/π. The +1e-9 nudge keeps the sign decision identical across
+    engines when a dot lands within float noise of zero.
 
-    ONE ``aggregate`` over a literal plane TABLE (array of arrays)
-    with a (sum, power-of-two) struct accumulator — not a chain of P
-    per-plane expressions: the chained form built P nested
-    zip_with/aggregate trees through py4j, costing ~4 s of
-    DRIVER-side plan construction at 32 planes before a single row
-    moved (measured on the banded query; the wide adaptive widths
-    made it the dominant cost). Per-plane math is unchanged
-    (left-to-right zip_with dot, +1e-9 nudge), so buckets are
-    bit-identical to the chained form and to the SQL oracle. The
-    plane table is emitted as ONE SQL string (a single JVM parse —
-    per-literal Column construction cost a py4j round trip for each
-    of the P×64 signs, the CMS counter table lesson applied here)."""
-    planes = F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{float(x)}D" for x in s) + ")" for s in signs
-        )
-        + ")"
-    )
+    Each word is ONE ``aggregate`` over a literal plane table emitted
+    as a single SQL string, with a (sum, power-of-two) accumulator: a
+    chain of per-plane expressions (or per-literal Columns) costs
+    seconds of plan construction at tens of planes.
+    Missing dimensions of a short row contribute 0 to every dot, as in
+    the numpy kernel and the SQL oracles; a NULL embedding has a NULL
+    signature and so joins no bucket.
+
+    This is the small-corpus path (:func:`hyperplane_signature`) and
+    the reference the numpy kernel is parity-tested against; the SQL
+    oracles restate it term for term."""
     zero = F.struct(
         F.lit(0).cast("bigint").alias("s"), F.lit(1).cast("bigint").alias("pw")
     )
 
     def step(acc, sv):
         dot = F.aggregate(
-            F.zip_with(vec_col, sv, lambda a, b: a.cast("double") * b),
+            F.zip_with(
+                vec_col,
+                sv,
+                lambda a, b: F.coalesce(a.cast("double") * b, F.lit(0.0)),
+            ),
             F.lit(0.0),
-            lambda a2, v: a2 + v,
+            lambda t, x: t + x,
         )
         return F.struct(
             (
@@ -443,265 +437,141 @@ def hyperplane_bucket(vec_col: Column, signs) -> Column:
             (acc["pw"] * F.lit(2).cast("bigint")).alias("pw"),
         )
 
-    return F.aggregate(planes, zero, step, lambda acc: acc["s"])
-
-
-def hyperplane_bucket_arrow(vec_col: Column, signs) -> Column:
-    """Arrow-vectorized twin of :func:`hyperplane_bucket`: one numpy
-    matmul per batch instead of P×64 interpreted higher-order-function
-    ops per row. HOF lambdas never enter whole-stage codegen, and at
-    200 k vectors the interpreted signature was 30.6 s of the 69.6 s
-    query wall (SCALING.md §7c); this kernel measured the same stage
-    at 0.69 s vs 16.1 s warm (23×) with ZERO bucket mismatches across
-    the 200 k corpus. Per-plane math is the same IEEE double dot with
-    the same +1e-9 sign nudge — numpy's pairwise/BLAS summation can
-    reorder additions, but so can DuckDB's aggregate on the oracle
-    side; the nudge is exactly the tolerance that makes the sign
-    decision stable under ~1e-16 reassociation noise (numeric policy
-    #3), and the expression twin stays in-tree with a parity test
-    pinning the two forms against each other. Production callers use
-    this form; :func:`hyperplane_bucket` remains the declarative
-    reference (and the form the SQL oracle textually mirrors)."""
-    if not signs:
-        return F.lit(0).cast("bigint")
-    # one bigint holds ≤ SIGNATURE_WORD_BITS sign bits — wider
-    # signatures go through hyperplane_bucket_words_arrow
-    assert len(signs) <= SIGNATURE_WORD_BITS, len(signs)
-    import numpy as np
-    import pandas as pd
-
-    s_t = np.asarray(signs, dtype=np.float64).T  # (dim, P)
-    pows = 1 << np.arange(len(signs), dtype=np.int64)
-
-    @F.pandas_udf("long")
-    def _bucket(v: pd.Series) -> pd.Series:
-        m = _vector_matrix(v, s_t.shape[0])
-        bits = (m @ s_t) + 1e-9 >= 0
-        return pd.Series((bits * pows).sum(axis=1).astype(np.int64))
-
-    return _bucket(vec_col)
-
-
-def _vector_matrix(v, dim: int):
-    """Batch-of-embeddings → (n, dim) float64 matrix for the Arrow
-    signature kernels. The fast path is one np.asarray over the
-    uniform-width batch; a batch with ragged or short rows (which
-    np.asarray would turn into an object array, crashing the matmul
-    with an opaque shape error) falls back to explicit pad/truncate
-    with 0-fill — the same semantics as the declarative twin and the
-    oracle's ``r.i <= len(embedding)`` guard, where a missing
-    dimension contributes 0 to every plane dot."""
-    import numpy as np
-
-    rows = v.tolist()
-    try:
-        m = np.asarray(rows, dtype=np.float64)
-        if m.ndim == 2 and m.shape[1] == dim:
-            return m
-    except ValueError:
-        pass
-    m = np.zeros((len(rows), dim), dtype=np.float64)
-    for i, row in enumerate(rows):
-        a = np.asarray(row[:dim], dtype=np.float64)
-        m[i, : a.shape[0]] = a
-    return m
-
-
-def signature_n_words(
-    n_planes: int, word_bits: int = SIGNATURE_WORD_BITS
-) -> int:
-    """Words of a wide signature: ceil(P / word_bits), minimum 1."""
-    return max(1, -(-n_planes // word_bits))
-
-
-#: Corpus size where the Arrow signature kernel starts to win. The
-#: pandas_udf round-trip is a FIXED per-query cost (~0.2-0.4 s at
-#: local[32]) that regressed the 2 k-vector bench rows 15-45% in r8
-#: while winning 23× on the signature stage at 200 k vectors
-#: (SCALING.md §7c); below this row count the declarative
-#: higher-order-function form — the form the SQL oracle textually
-#: mirrors, parity-pinned against the kernel — is both faster and
-#: simpler. 10 k ≈ where the interpreted per-row cost (p·dim HOF ops
-#: × rows) first exceeds the kernel's fixed overhead with margin.
-ARROW_SIGNATURE_MIN_ROWS = 10_000
-
-#: ... or when rows × planes crosses this (measured r9, sf0.1 = 2 k
-#: rows: a 90-plane signature ran 2.45 s expression vs 1.24 s Arrow —
-#: the interpreted cost is per plane-dot, the kernel's fixed cost is
-#: per query — while at ≤16 planes the two are within window noise).
-ARROW_SIGNATURE_MIN_WORK = 100_000
-
-
-def _use_arrow_signature(n_rows: int | None, n_planes: int) -> bool:
-    """Signature-form policy (VERDICT r8 item 5): the Arrow matmul
-    kernel when the corpus is large (ARROW_SIGNATURE_MIN_ROWS), the
-    per-query plane-dot work is large (ARROW_SIGNATURE_MIN_WORK), or
-    the size is unknown (the scale-safe default); the declarative
-    expression form otherwise — it avoids the pandas_udf round-trip
-    that regressed the 2 k-vector bench rows in r8. Both forms are
-    bit-identical by the parity tests; this only picks the cheaper
-    engine for the shape."""
-    return (
-        n_rows is None
-        or n_rows >= ARROW_SIGNATURE_MIN_ROWS
-        or n_rows * max(n_planes, 1) >= ARROW_SIGNATURE_MIN_WORK
-    )
-
-
-def hyperplane_bucket_auto(
-    vec_col: Column, signs, n_rows: int | None
-) -> Column:
-    """Form-picking wrapper over the two parity-pinned signature
-    kernels — see :func:`_use_arrow_signature`."""
-    if _use_arrow_signature(n_rows, len(signs)):
-        return hyperplane_bucket_arrow(vec_col, signs)
-    return hyperplane_bucket(vec_col, signs)
-
-
-def hyperplane_bucket_words_auto(
-    vec_col: Column, signs, n_rows: int | None
-) -> Column:
-    """Multi-word twin of :func:`hyperplane_bucket_auto`."""
-    if _use_arrow_signature(n_rows, len(signs)):
-        return hyperplane_bucket_words_arrow(vec_col, signs)
-    return hyperplane_bucket_words(vec_col, signs)
-
-
-def hyperplane_bucket_words(
-    vec_col: Column, signs, word_bits: int = SIGNATURE_WORD_BITS
-) -> Column:
-    """Multi-word wide signature — the r9 extension past the one-
-    bigint 60-plane cap (SCALING.md §7c, the measured binding
-    constraint at the 100× lake): word w carries the sign bits of
-    planes [w·word_bits, (w+1)·word_bits) as one bigint, so a
-    P-plane signature is an ARRAY of ceil(P/60) bigints. Declarative
-    reference form — each word is one :func:`hyperplane_bucket` over
-    its plane slice (same per-plane IEEE dot + 1e-9 nudge), and the
-    SQL oracle restates each word as an independent CASE·2^(p−60w)
-    sum. Word 0 of a words signature is BIT-IDENTICAL to the legacy
-    single-bigint bucket over the first min(P, 60) planes."""
-    n_words = signature_n_words(len(signs), word_bits)
-    return F.array(
-        *[
-            hyperplane_bucket(
-                vec_col, signs[w * word_bits : (w + 1) * word_bits]
+    def word(planes) -> Column:
+        if not planes:
+            return F.lit(0).cast("bigint")
+        table = F.expr(
+            "array("
+            + ",".join(
+                "array(" + ",".join(f"{float(x)}D" for x in s) + ")"
+                for s in planes
             )
-            for w in range(n_words)
-        ]
+            + ")"
+        )
+        return F.aggregate(table, zero, step, lambda acc: acc["s"])
+
+    wb = SIGNATURE_WORD_BITS
+    return F.when(
+        vec_col.isNotNull(),
+        F.array(
+            *[
+                word(signs[w * wb : (w + 1) * wb])
+                for w in range(signature_n_words(len(signs)))
+            ]
+        ),
     )
 
 
 def hyperplane_bucket_words_arrow(
-    vec_col: Column, signs, word_bits: int = SIGNATURE_WORD_BITS
+    vec_col: Column, signs, probe: tuple[int, int] | None = None
 ) -> Column:
-    """Arrow-vectorized twin of :func:`hyperplane_bucket_words`: the
-    sign-bit matrix comes from ONE numpy matmul per batch (the
-    :func:`hyperplane_bucket_arrow` kernel shape — measured 23× on
-    the signature stage at 200 k vectors), then folds into per-word
-    bigints. Same +1e-9 nudge, same word layout; the expression form
-    stays the parity-tested declarative reference."""
-    import numpy as np
-    import pandas as pd
+    """Numpy form of :func:`hyperplane_bucket_words`: one matmul per
+    Arrow batch instead of P·dim interpreted higher-order-function ops
+    per row, which never enter whole-stage codegen (23× faster on the
+    signature stage at 200 k vectors). Same +1e-9 nudge, word layout,
+    short-row and NULL-row handling. numpy may reassociate a dot's
+    additions, but the nudge is exactly the tolerance that keeps the
+    sign decision stable under that ~1e-16 noise; the parity test pins
+    the two forms against each other.
 
-    n_words = signature_n_words(len(signs), word_bits)
+    ``probe=(prefix_planes, n_probes)`` appends one more element: the
+    bounded multiprobe mask, with bit i set for the ``n_probes`` planes
+    among the first ``prefix_planes`` whose dot lies closest to the
+    hyperplane — the planes a borderline neighbour most likely sits
+    across (Lv et al. 2007, multi-probe LSH). Closeness is ranked on
+    floor((|dot| + 1e-9)·10⁶ + 0.5), the half-up rounding SQL
+    round(x, 6) computes (numpy's own round is half-even), ties to the
+    lower plane, so the oracle's row_number ranks identically. The
+    nudge protects fixed thresholds, not this data-relative rank: two
+    planes whose |dot| straddle a 10⁻⁶ quantization edge by less than
+    float-summation noise could still rank differently on the two
+    engines (a tie-heavy test fixture pins the rounding)."""
     if not signs:
-        return F.array(F.lit(0).cast("bigint"))
+        return F.when(vec_col.isNotNull(), F.array(F.lit(0).cast("bigint")))
     s_t = np.asarray(signs, dtype=np.float64).T  # (dim, P)
-    word_pows = [
-        (
-            w * word_bits,
-            min(len(signs), (w + 1) * word_bits) - w * word_bits,
-        )
-        for w in range(n_words)
-    ]
+    dim, n_planes = s_t.shape
+    word_of = np.arange(n_planes) // SIGNATURE_WORD_BITS
+    weight = np.int64(1) << (np.arange(n_planes) % SIGNATURE_WORD_BITS)
 
     @F.pandas_udf("array<long>")
-    def _bucket_words(v: pd.Series) -> pd.Series:
-        m = _vector_matrix(v, s_t.shape[0])
-        bits = (m @ s_t) + 1e-9 >= 0
-        words = [
-            (
-                bits[:, off : off + width]
-                * (1 << np.arange(width, dtype=np.int64))
-            ).sum(axis=1)
-            for off, width in word_pows
-        ]
-        stacked = np.stack(words, axis=1).astype(np.int64)
-        return pd.Series(list(stacked))
-
-    return _bucket_words(vec_col)
-
-
-def hyperplane_bucket_probe_arrow(
-    vec_col: Column, signs, prefix_planes: int, n_probes: int
-) -> Column:
-    """Signature + bounded probe mask in ONE Arrow kernel: returns
-    struct(hp, probe_mask) where ``hp`` is the usual sign-bit bucket
-    over all ``signs`` and ``probe_mask`` has bit i set for the
-    ``n_probes`` PREFIX planes (i < prefix_planes) whose dot product
-    sits closest to the hyperplane — the planes most likely to flip
-    for a borderline neighbor (Lv et al. 2007 multi-probe LSH). The
-    closeness order is over round(|dot| + 1e-9, 6) with the plane
-    index as tiebreak — quantized here as
-    floor((|dot| + 1e-9)·10⁶ + 0.5), the exact positive-value
-    half-up the SQL round() computes (numpy's own round is
-    half-EVEN), so the oracle's row_number restatement ranks
-    identically under float-summation-order noise (the same
-    nudge-then-round policy as every cosine cut).
-
-    Known residual risk (ADVICE r9, accepted under the repo's
-    numeric policy): the 1e-9 nudge protects FIXED thresholds, not
-    this data-relative rank boundary — if two different planes'
-    |dot| values straddle a 1e-6 quantization edge by less than
-    float-summation noise, numpy (one matmul) and the oracle
-    (per-dimension sum) can rank them oppositely and flip the
-    boundary probe. Same class as the round-6 cosine-cut risk;
-    tests/test_similarity.py keeps a tie-heavy fixture on this
-    kernel."""
-    import numpy as np
-    import pandas as pd
-
-    assert signs and len(signs) <= SIGNATURE_WORD_BITS
-    assert prefix_planes <= len(signs)
-    s_t = np.asarray(signs, dtype=np.float64).T  # (dim, P)
-    pows = 1 << np.arange(len(signs), dtype=np.int64)
-    t = min(n_probes, prefix_planes)
-
-    @F.pandas_udf("struct<hp: long, probe_mask: long>")
-    def _sig_probe(v: pd.Series) -> pd.DataFrame:
-        m = _vector_matrix(v, s_t.shape[0])
+    def _signature(v: pd.Series) -> pd.Series:
+        valid = v.notna().to_numpy()
+        m = np.zeros((len(v), dim))
+        try:
+            x = np.stack(v[valid].to_numpy())
+            m[valid, : x.shape[1]] = x[:, :dim]
+        except ValueError:  # ragged rows (or none): pad/truncate each
+            for i, row in zip(np.flatnonzero(valid), v[valid]):
+                row = np.asarray(row[:dim], dtype=np.float64)
+                m[i, : len(row)] = row
+        m[np.isnan(m)] = 0.0  # a NULL element is a missing dimension
         dots = m @ s_t
-        hp = (((dots + 1e-9) >= 0) * pows).sum(axis=1).astype(np.int64)
-        key = np.floor(
-            (np.abs(dots[:, :prefix_planes]) + 1e-9) * 1e6 + 0.5
-        )
-        # lexicographic (quantized |dot|, plane idx): argsort is
-        # stable, so ties break toward the lower plane index
-        order = np.argsort(key, axis=1, kind="stable")[:, :t]
-        mask = np.zeros(len(hp), dtype=np.int64)
-        for j in range(order.shape[1]):
-            mask |= np.int64(1) << order[:, j].astype(np.int64)
-        return pd.DataFrame({"hp": hp, "probe_mask": mask})
+        bits = ((dots + 1e-9) >= 0) * weight
+        cols = [bits[:, word_of == w].sum(axis=1) for w in range(word_of[-1] + 1)]
+        if probe is not None:
+            prefix_planes, n_probes = probe
+            rank = np.floor((np.abs(dots[:, :prefix_planes]) + 1e-9) * 1e6 + 0.5)
+            nearest = np.argsort(rank, axis=1, kind="stable")[:, :n_probes]
+            cols.append((np.int64(1) << nearest).sum(axis=1))
+        out = pd.Series(list(np.stack(cols, axis=1).astype(np.int64)))
+        out[~valid] = None
+        return out
 
-    return _sig_probe(vec_col)
+    return _signature(vec_col)
 
 
-def band_key_words(
-    word_cols: list[Column],
-    off: int,
-    width: int,
-    word_bits: int = SIGNATURE_WORD_BITS,
+def signature_n_words(n_planes: int) -> int:
+    """Words of a P-plane signature: ceil(P / 60), minimum 1."""
+    return max(1, -(-n_planes // SIGNATURE_WORD_BITS))
+
+
+#: Corpus size where the numpy signature kernel starts to win. The
+#: pandas_udf round trip is a fixed per-query cost (~0.2-0.4 s), which
+#: cost 2 k-vector queries 15-45% while the kernel ran the signature
+#: stage 23× faster at 200 k vectors; 10 k rows is where the
+#: interpreted per-row cost (planes × dim HOF ops) first exceeds that
+#: fixed cost with margin.
+ARROW_SIGNATURE_MIN_ROWS = 10_000
+
+#: ... or when rows × planes crosses this: the interpreted cost is per
+#: plane-dot, the kernel's per query (a 90-plane signature over 2 k
+#: rows ran 2.45 s as expressions vs 1.24 s in numpy; at ≤ 16 planes
+#: the two are within noise).
+ARROW_SIGNATURE_MIN_WORK = 100_000
+
+
+def hyperplane_signature(
+    vec_col: Column, signs, n_rows: int | None, probe: tuple[int, int] | None = None
 ) -> Column:
+    """The signature words of :func:`hyperplane_bucket_words` from the
+    cheaper engine for the shape. The numpy kernel runs when the corpus
+    is large (:data:`ARROW_SIGNATURE_MIN_ROWS`), the plane-dot work is
+    large (:data:`ARROW_SIGNATURE_MIN_WORK`), the size is unknown (the
+    scale-safe default) or a probe mask is asked for (only the kernel
+    computes one); the expression form otherwise, which skips the
+    pandas_udf round trip. The forms are bit-identical, so this only
+    picks speed."""
+    small = (
+        n_rows is not None
+        and n_rows < ARROW_SIGNATURE_MIN_ROWS
+        and n_rows * max(len(signs), 1) < ARROW_SIGNATURE_MIN_WORK
+    )
+    if small and probe is None:
+        return hyperplane_bucket_words(vec_col, signs)
+    return hyperplane_bucket_words_arrow(vec_col, signs, probe)
+
+
+def band_key_words(word_cols: list[Column], off: int, width: int) -> Column:
     """Bit-slice [off, off+width) of a multi-word signature as one
     bigint band key. ``off``/``width`` are Python literals (the
     driver-side band layout), so word selection and the straddle
     split are resolved at plan-build time: a band lies in one word,
-    or spans exactly two (width ≤ 31 < word_bits). The SQL oracle
-    restates the same split with CASE arithmetic over the same
-    layout scalars."""
-    lo_word = off // word_bits
-    lo_off = off % word_bits
-    lo_bits = min(word_bits - lo_off, width)
+    or spans exactly two (width ≤ 31 < 60). The SQL oracle restates
+    the same split with CASE arithmetic over the same layout
+    scalars."""
+    wb = SIGNATURE_WORD_BITS
+    lo_word, lo_off = divmod(off, wb)
+    lo_bits = min(wb - lo_off, width)
     key = F.shiftright(word_cols[lo_word], lo_off).bitwiseAND(
         F.lit((1 << lo_bits) - 1).cast("bigint")
     )
@@ -715,7 +585,6 @@ def band_key_words(
 
 def near_dup_pairs_hyperplane(
     df: DataFrame,
-    signs=None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9,
@@ -724,71 +593,45 @@ def near_dup_pairs_hyperplane(
     n_rows: int | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs with random-hyperplane LSH candidate
-    generation: bucket on the P-bit hyperplane signature, then verify
-    cosine within buckets. No precomputed label or trained centroids
-    needed — the data-independent LSH variant of
-    :func:`near_dup_pairs`; recall is tuned by P (fewer planes = more
-    candidates) or by multi-probe/banding at very high P.
+    generation: bucket on the hyperplane signature, then verify cosine
+    within buckets. No label or trained centroids needed — the
+    data-independent LSH variant of :func:`near_dup_pairs`.
 
-    ``signs=None`` (the default) derives the resolution from the
-    corpus count via :func:`fractional_split` — one bounded driver
-    action (a count aggregate) buys a FRACTIONAL (1/4-step) width:
-    the signature reads p+1 planes, merged prefixes bucket on p bits
-    and the ``prefix % 4 < r`` quarter-fraction on p+1, so E[bucket
-    depth] — and with it per-bucket verify work — stays within ±6%
-    of target at ANY corpus size instead of sawtoothing ±2× per data
-    octave (the r7 weak flag, SCALING.md §7). The single-signature
-    recall trade (genuine near-dups collide with probability
-    ≈(1-θ/π)^p) is the documented cost; multi-probe or banding over
-    the same signature is the production recall knob. An explicit
-    ``signs`` keeps the legacy exact-collision-on-len(signs)-planes
-    semantics (used by callers that manage their own resolution,
-    e.g. the label-composite dedup_embedding_cosine). ``n_rows``
-    (when the caller already knows the corpus count — e.g. from
-    parquet footer metadata, catalog.table_rows) skips the count
-    job."""
-    n = n_rows
-    if signs is None:
-        if n is None:
-            n = df.count()
-        p, r = fractional_split(n, target_bucket=target_bucket)
-        # the fractional key always fits ONE bigint word: p = Q//4
-        # ≤ MAX_QUARTER_STEPS//4 = 30 planes + the extension bit
-        assert p + 1 <= SIGNATURE_WORD_BITS, (p, SIGNATURE_WORD_BITS)
-        # r = 0 never keys on the extension bit — skip its plane (the
-        # signature is the dominant per-row cost; one unused plane is
-        # +1/p of it for nothing)
-        signs = hyperplane_signs(p + (1 if r else 0), dim)
-        key = fractional_key(
-            hyperplane_bucket_auto(F.col(vec_col), signs, n), p, r
-        )
-    else:
-        key = hyperplane_bucket_arrow(F.col(vec_col), signs)
+    The resolution comes from the corpus count via
+    :func:`fractional_split`: the signature reads p+1 planes, merged
+    prefixes bucket on p bits and the ``prefix % 4 < r`` quarter on
+    p+1 (:func:`fractional_key`), so E[bucket depth] — and with it
+    per-bucket verify work — stays within ±6% of ``target_bucket`` at
+    any corpus size instead of sawtoothing ±2× per octave. A genuine
+    near-dup pair collides only with probability ≈ (1-θ/π)^p; probing
+    (:func:`near_dup_pairs_multiprobe`) or banding
+    (:func:`near_dup_pairs_banded`) over the same signature buys that
+    recall back. ``n_rows`` (the corpus count when the caller already
+    knows it, e.g. from parquet footers) skips the count job.
+
+    Verify tail: exact-collision verify work is Σ bucket-depth², and on
+    label-clustered corpora dense cells split slower than the mean as
+    planes are added (Σd² grew 14.5× per decade at 200 k vectors while
+    mean depth stayed flat). Past :data:`ARROW_SIGNATURE_MIN_ROWS` the
+    pairs therefore come from :func:`near_dup_pairs_blas` — numpy
+    matmuls per bucket, dense cells spread over block-pair tasks;
+    smaller corpora keep the higher-order-function join, which is
+    faster under the applyInPandas fixed cost. Both tails emit the same
+    pairs (test-pinned)."""
+    n = df.count() if n_rows is None else n_rows
+    p, r = fractional_split(n, target_bucket=target_bucket)
+    # r = 0 never keys on the extension bit, so skip its plane
+    signs = hyperplane_signs(p + (1 if r else 0), dim)
+    hp = F.element_at(hyperplane_signature(F.col(vec_col), signs, n), 1)
     df = ensure_scan_parallelism(df, n)
     bucketed = _cache_signatures(
-        df.select(F.col(id_col), F.col(vec_col), key.alias("hp_bucket"))
+        df.select(
+            F.col(id_col), F.col(vec_col), fractional_key(hp, p, r).alias("hp_bucket")
+        )
     )
-    # Verify-stage policy (VERDICT r8 weak flag #1): exact-collision
-    # verify work is Σ bucket-depth², and on label-CLUSTERED corpora
-    # dense cells split sub-uniformly as planes are added — measured
-    # Σd² 14.5×/decade at the 100× lake while mean depth stayed flat
-    # (SCALING.md §7c). The interpreted per-pair HOF join made that
-    # second moment the wall-clock term (16.4× wall per decade); the
-    # census-gated BLAS block-pair path computes the same pairs as
-    # numpy matmuls inside applyInPandas — the Σd² work stays (it is
-    # the candidate semantics) but runs at GFLOP speed, and buckets
-    # past split_bucket spread over block-pair tasks so a dense cell
-    # can never straggle one task. Small corpora keep the HOF join
-    # (the declarative reference, faster under the applyInPandas
-    # fixed overhead); both tails are pinned identical by
-    # test_hyperplane_verify_paths_identical and the shared oracle.
-    if n is not None and n < ARROW_SIGNATURE_MIN_ROWS:
+    if n < ARROW_SIGNATURE_MIN_ROWS:
         return near_dup_pairs(
-            bucketed,
-            "hp_bucket",
-            id_col=id_col,
-            vec_col=vec_col,
-            threshold=threshold,
+            bucketed, "hp_bucket", id_col=id_col, vec_col=vec_col, threshold=threshold
         )
     return near_dup_pairs_blas(
         bucketed,
@@ -800,14 +643,11 @@ def near_dup_pairs_hyperplane(
     )
 
 
-
-# One persisted signature frame at a time (the _PREFIX_BASE_CACHE
-# pattern from dedup.py): the census, the anti-join probe, and both
-# self-join sides all consume the bucketed frame, and the P-plane
-# interpreted signature is the family's dominant per-row cost — an
-# unpersisted frame would recompute it once per consumer (measured
-# 3x at sf1). Each new invocation evicts the previous call's cache,
-# so repeated calls hold at most one corpus-sized signature frame.
+# One persisted signature frame at a time: the census, the anti join
+# and both sides of the candidate join all read the signature frame,
+# and the interpreted signature is the family's dominant per-row cost,
+# so an unpersisted frame would recompute it once per consumer. Each
+# call evicts the previous call's frame.
 _SIG_CACHE: list = []
 
 
@@ -829,12 +669,10 @@ def _verify_pairs(
     vec_col: str,
     threshold: float,
 ) -> DataFrame:
-    """Attach both vectors to DISTINCT candidate id-pairs and apply
-    the shared rounded-cosine cut — the verify tail common to the
-    probe/band candidate generators. Norms ride the vector
-    projections (n folds), not the pair expression (2·pairs folds) —
-    bit-identical values, ~3× less per-pair HOF work (r10; same
-    rewrite as _scored)."""
+    """Attach both vectors to distinct candidate id pairs and apply
+    the shared rounded-cosine cut. Norms ride the per-vector
+    projections (n folds), not the pair expression (2 folds per
+    pair) — the same values with a third of the per-pair work."""
     a = df.select(
         F.col(id_col).alias("a_id"), to_double_array(F.col(vec_col)).alias("qv")
     ).withColumn("_qn", norm(F.col("qv")))
@@ -859,6 +697,80 @@ def _verify_pairs(
     )
 
 
+def _probe_join_pairs(
+    df: DataFrame,
+    sig: Column,
+    exact_keys: Column,
+    probe_keys: Column,
+    id_col: str,
+    vec_col: str,
+    threshold: float,
+    max_bucket: int,
+    n_rows: int | None,
+) -> DataFrame:
+    """The candidate generator under the probe and band constructions,
+    followed by the rounded-cosine verify. ``sig`` is the signature
+    column; ``exact_keys`` (over column ``sig``) is the array of a
+    row's bucket keys, one per *unit* — one unit per row for probing,
+    one per band for banding; ``probe_keys`` (over ``sig`` and the
+    unit's own ``key``) is the array of buckets the unit looks into,
+    NULL entries skipped. A pair is a candidate when a probe key of
+    one side's unit equals an exact key of the other's.
+
+    The shared work, in order: persist the signature frame (every
+    step below reads it); drop the units whose exact key holds more
+    than ``max_bucket`` rows (census groupBy + broadcast anti join),
+    so an adversarial corpus collapsing onto one key loses recall on
+    that key but can never make a task's pair work exceed
+    max_bucket² — on non-adversarial data the adaptive widths keep
+    depth far below the cap; explode the probes, equi-join on the key
+    and keep the canonical (least, greatest) id pairs distinct. A
+    probe rule need not be symmetric — a pair may meet in one
+    direction only — so the pair is canonicalized rather than
+    filtered with ``<``. Bare ids travel through the join and the
+    distinct; the vectors attach only in :func:`_verify_pairs`. Rows
+    with a NULL signature (NULL embeddings) take part in no pair."""
+    df = ensure_scan_parallelism(df, n_rows)
+    # filter the cached frame: pushed below the projection, the NULL
+    # test would evaluate the signature a second time
+    rows = _cache_signatures(df.select(F.col(id_col), sig.alias("sig"))).where(
+        F.col("sig").isNotNull()
+    )
+    units = rows.select(F.col(id_col), "sig", F.explode(exact_keys).alias("key"))
+    hot = (
+        units.groupBy("key")
+        .agg(F.count(F.lit(1)).alias("_bn"))
+        .where(F.col("_bn") > max_bucket)
+        .select("key")
+    )
+    units = units.join(F.broadcast(hot), on="key", how="left_anti")
+    probes = units.select(
+        F.col(id_col), F.explode(probe_keys).alias("key")
+    ).where(F.col("key").isNotNull())
+    exact = units.select(F.col(id_col).alias("item_id"), "key")
+    cand = (
+        probes.join(exact, on="key")
+        .where(F.col(id_col) != F.col("item_id"))
+        .select(
+            F.least(F.col(id_col), F.col("item_id")).alias("a_id"),
+            F.greatest(F.col(id_col), F.col("item_id")).alias("b_id"),
+        )
+        .distinct()
+    )
+    return _verify_pairs(cand, df, id_col, vec_col, threshold)
+
+
+#: Default probe budget of :func:`near_dup_pairs_multiprobe`. While the
+#: prefix width p ≤ 8, flipping every prefix plane costs no more than
+#: the bounded rule would (fan-out p+2 ≤ 10) and both rules emit the
+#: same pairs, so small corpora — p = 6 at 500 vectors, 8 at 2 000 —
+#: run the full rule. Past it each row probes only its 8 nearest
+#: planes: 10 probe rows per input row at every corpus size, where the
+#: full rule's log-n fan-out made the explode n·log n (11.1× wall per
+#: decade).
+MULTIPROBE_BOUNDED_FANOUT = 8
+
+
 def near_dup_pairs_multiprobe(
     df: DataFrame,
     signs,
@@ -869,327 +781,98 @@ def near_dup_pairs_multiprobe(
     prefix_planes: int | None = None,
     split_r: int = 0,
     n_rows: int | None = None,
+    n_probes: int = MULTIPROBE_BOUNDED_FANOUT,
 ) -> DataFrame:
-    """Multi-probe extension of :func:`near_dup_pairs_hyperplane` —
-    the RECALL knob the adaptive plane count trades against: a pair
-    is a candidate when its bucket PREFIXES differ in AT MOST ONE
-    plane, not only on exact collision, so a borderline vector that
-    flips a single near-zero dot product still meets its neighbor —
-    at the cost of ONE explode replicating each row to p+2 probe
-    keys. Candidate volume stays linear (bucket depth × (p+2)),
-    never quadratic.
+    """Multi-probe hyperplane LSH near-dup pairs — the recall knob
+    the adaptive resolution trades against: a pair whose bucket
+    prefixes differ in one plane is still a candidate, so a
+    borderline vector that flips one near-zero dot still meets its
+    neighbour, at the cost of one explode to a few probe keys per row
+    (candidate volume linear in bucket depth, never quadratic).
 
-    FRACTIONAL resolution (``prefix_planes=p`` + ``split_r=r``, the
-    r7 weak-flag port): keys are :func:`fractional_key` over a
-    (p+1)-plane signature — merged prefixes (``prefix % 4 >= r``)
-    bucket on p bits, the rest on p+1 — so E[depth], and with it
-    per-probe join work, steps by ~1.19× per quarter-octave instead
-    of the integral 2× sawtooth that measured 4.07× wall at 3× data
-    (SCALING.md §7). The candidate rule in signature terms: with
-    d = Hamming(prefix_a, prefix_b),
+    Keys are :func:`fractional_key` over a (p+1)-plane signature
+    (``prefix_planes=p``, ``split_r=r``): merged prefixes
+    (``prefix % 4 >= r``) key on p bits, the rest on p+1, so depth
+    steps by ~1.19× per quarter-octave of data instead of 2×.
+    ``prefix_planes=None`` is the integral rule: p = len(signs), r = 0.
+    With d = Hamming(prefix_a, prefix_b) the full rule is
+
       d = 0  → candidate (the extension-flip probe covers unmerged
                pairs whose extension bits differ);
       d = 1  → candidate iff merged(prefix_a) OR merged(prefix_b)
                OR ext_a = ext_b;
       d ≥ 2  → not a candidate.
-    ``prefix_planes=None`` keeps the legacy integral semantics
-    (p = len(signs), r = 0: plain Hamming ≤ 1 on the full
-    signature).
 
-    Meeting rule (CANONICAL-DIRECTION probing, r12 — guide §2.3):
-    side A carries its exact fractional key plus one probe per
-    qualifying flip, side B carries the exact key only. Because the
-    full-prefix rule is SYMMETRIC (unlike the bounded-T sibling,
-    whose per-side probe masks force two-directional probing), each
-    d = 1 pair needs only ONE of its two directional meetings, so a
-    row emits:
+    While p ≤ ``n_probes`` the full rule runs, probing in one
+    canonical direction since it is symmetric: each row probes its
+    exact key; the UP flips of its prefix (planes where its bit is 0 —
+    for a pair one plane apart exactly the side with bit 0 probes, and
+    the key match encodes the meet condition against the target's
+    layout); the DOWN flips only from an unmerged prefix into a merged
+    one (possible for planes 0/1 only, the ``% 4`` selector bits),
+    the one case the up-prober's key cannot reach; and the extension
+    flip only when unmerged with ext = 0 (a merged row's flip keys
+    like its exact probe and would re-enumerate its whole bucket).
+    Every qualifying pair meets, with about half the meetings of
+    two-directional probing.
 
-    - UP prefix flips only (planes where its own bit is 0): for a
-      pair differing in plane i, exactly the side with bit 0 probes,
-      and the key match encodes the fractional meet condition
-      against the TARGET prefix's layout — merged(target) always
-      matches, unmerged(target) matches iff the ext bits agree;
-    - DOWN prefix flips only where they rescue the one asymmetric
-      case — own prefix UNMERGED, flipped prefix MERGED (only
-      possible for planes 0/1, the ``% 4`` selector bits): the
-      up-probing partner keys on (target prefix, own ext) against
-      this row's two-ext merged bucket and always matches, but the
-      REVERSE case (this row unmerged, ext differing) matches
-      nothing, so the unmerged side must also reach down into the
-      merged bucket;
-    - the extension flip only when UNMERGED with ext = 0 (probing
-      "up" to the ext = 1 sibling bucket; merged rows key both exts
-      to one bucket, making their ext flip a no-op duplicate of the
-      exact probe — the Σdepth² re-enumeration removed in r12).
-
-    Every qualifying unordered pair meets EXACTLY once per probe
-    class (d = 0 pairs twice, through both exact probes), the join
-    enumerates ~half the meetings of the two-directional form, and
-    the bare-id distinct collapses what multiplicity remains.
-    Verification is the same rounded-cosine cut as every sibling.
-
-    Hot-bucket guard (same contract as dedup.lsh_candidate_pairs'
-    census-enforced cap): vectors whose EXACT key's bucket exceeds
-    ``max_bucket`` are dropped from both sides before pairing — an
-    adversarial corpus that collapses onto one signature can
-    degrade recall (documented, one-sided) but can never make a
-    task's pair work exceed max_bucket², and the adaptive width
-    keeps E[depth] far below the cap on non-adversarial data so the
-    guard never binds at any tested SF (oracle unaffected)."""
+    Past p > ``n_probes`` the masked rule runs (Lv et al. 2007): each
+    row probes its exact key, its extension flip when unmerged, and
+    only the ``n_probes`` prefix planes nearest its hyperplanes
+    (:func:`hyperplane_bucket_words_arrow`'s probe mask), in both
+    directions because the masks are per side. A d = 1 pair is then a
+    candidate iff the differing plane is in either side's mask and the
+    meet condition holds — the full rule restricted to masked planes,
+    and the same rule exactly when every plane is masked. Probe work
+    per row is (n_probes+2)·depth with both factors constant, so the
+    candidate stage stays linear at any corpus size; a pair is missed
+    only when its differing plane lies outside both rows' nearest
+    sets."""
     p = len(signs) if prefix_planes is None else prefix_planes
     r = split_r
-    # single-bigint signature by construction: p ≤ MAX_QUARTER_STEPS//4
+    # one bigint word: p ≤ MAX_QUARTER_STEPS // 4 = 30 by construction
     assert p + 1 <= SIGNATURE_WORD_BITS and len(signs) <= SIGNATURE_WORD_BITS
-    hp = hyperplane_bucket_auto(F.col(vec_col), signs, n_rows)
-    df = ensure_scan_parallelism(df, n_rows)
-    bucketed = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        hp.alias("hp"),
-        fractional_key(hp, p, r).alias("hpk"),
+    masked = p > n_probes
+    sig = hyperplane_signature(
+        F.col(vec_col), signs, n_rows, probe=(p, n_probes) if masked else None
     )
-    bucketed = _cache_signatures(bucketed)
-    hot = (
-        bucketed.groupBy("hpk")
-        .agg(F.count(F.lit(1)).alias("_bn"))
-        .where(F.col("_bn") > max_bucket)
-        .select("hpk")
-    )
-    bucketed = bucketed.join(F.broadcast(hot), on="hpk", how="left_anti")
-    prefix = F.col("hp").bitwiseAND(F.lit((1 << p) - 1).cast("bigint"))
-    ext = F.shiftright(F.col("hp"), p).bitwiseAND(F.lit(1).cast("bigint"))
-    keyed = lambda pref, e: fractional_key_parts(pref, e, r)  # noqa: E731
-
-    # candidate generation carries BARE IDS: a pair can meet through
-    # several probes, so dedup before the vectors attach — otherwise
-    # every duplicate candidate drags two 64-dim arrays through the
-    # distinct's exchange
+    hp = F.element_at("sig", 1)
+    prefix = hp.bitwiseAND(F.lit((1 << p) - 1).cast("bigint"))
+    ext = F.shiftright(hp, p).bitwiseAND(F.lit(1).cast("bigint"))
     unmerged = (prefix % 4) < F.lit(r)
 
-    def flip_probe(i: int) -> Column:
-        # canonical-direction probing (see the docstring's meeting
-        # rule): UP flips always, DOWN flips only into a MERGED
-        # target from an UNMERGED prefix — statically impossible for
-        # planes >= 2 (the flip does not change prefix % 4, so the
-        # target's merged status equals the prober's)
+    def bit(x: Column, i: int) -> Column:
+        return F.shiftright(x, i).bitwiseAND(F.lit(1).cast("bigint")) == 1
+
+    def flip(i: int) -> Column:
         target = prefix.bitwiseXOR(F.lit(1 << i).cast("bigint"))
-        up = F.shiftright(prefix, i).bitwiseAND(F.lit(1).cast("bigint")) == 0
-        cond = up
-        if i < 2 and r > 0:
-            cond = cond | (unmerged & ((target % 4) >= F.lit(r)))
-        return F.when(cond, keyed(target, ext))
+        if masked:
+            ok = bit(F.element_at("sig", -1), i)
+        else:
+            ok = ~bit(prefix, i)
+            if i < 2 and r > 0:
+                ok = ok | (unmerged & ((target % 4) >= F.lit(r)))
+        return F.when(ok, fractional_key_parts(target, ext, r))
 
-    probes = bucketed.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                F.col("hpk"),
-                # ext flip: only unmerged rows have a distinct ext
-                # bucket (merged keys zero the ext term — probing it
-                # would re-enumerate the whole exact bucket, the
-                # Σdepth² term), and one direction suffices for the
-                # symmetric d = 0 rule
-                F.when(
-                    unmerged & (ext == F.lit(0).cast("bigint")),
-                    keyed(prefix, F.lit(1).cast("bigint")),
-                ),
-                *[flip_probe(i) for i in range(p)],
-            )
-        ).alias("probe"),
-    ).where(F.col("probe").isNotNull())
-    exact = bucketed.select(
-        F.col(id_col).alias("item_id"), F.col("hpk").alias("probe")
-    )
-    # A pair may meet in only ONE direction (a merged prefix's exact
-    # key is reachable from its unmerged neighbor's probe, but not
-    # vice versa when the extension bits differ), so canonicalize
-    # with least/greatest rather than filtering probe_id < exact_id —
-    # the directional filter would drop the one meeting path. (A
-    # two-branch split that `<`-filters the equal-key component and
-    # least/greatests only the flip meetings was measured at all
-    # three SFs: no win — the distinct is not the binding stage — so
-    # the simpler single join stays.)
-    cand = (
-        probes.join(exact, on="probe")
-        .where(F.col(id_col) != F.col("item_id"))
-        .select(
-            F.least(F.col(id_col), F.col("item_id")).alias("a_id"),
-            F.greatest(F.col(id_col), F.col("item_id")).alias("b_id"),
-        )
-        .distinct()
-    )
-    return _verify_pairs(cand, df, id_col, vec_col, threshold)
-
-
-def near_dup_pairs_multiprobe_bounded(
-    df: DataFrame,
-    signs,
-    prefix_planes: int,
-    split_r: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-    max_bucket: int = 4096,
-    n_probes: int = 8,
-    n_rows: int | None = None,
-) -> DataFrame:
-    """Bounded-fan-out multiprobe (Lv et al. 2007, "Multi-Probe
-    LSH") — the TRULY-LINEAR member of the probe family: instead of
-    flipping every prefix plane (fan-out p+2, which grows with
-    log n and leaves an n·log n explode even after the work-target
-    normalization — the 11.1×/decade residual in SCALING.md §7d),
-    each row probes only its ``n_probes`` LOWEST-|dot| prefix planes
-    — the flips a borderline neighbor is most likely to differ in —
-    plus the exact key and the extension flip. Work per row =
-    (n_probes+2)·depth with BOTH factors constant (depth from the
-    depth-constant fractional split), so total work is linear in the
-    corpus at every scale.
-
-    The pair rule in signature terms: with x = xor(prefix_a,
-    prefix_b), a pair is a candidate iff x = 0 (the extension flip
-    covers unmerged ext mismatches), or bit_count(x) = 1 AND the
-    differing plane is in EITHER side's probe mask AND the
-    fractional-key meet condition holds (merged_a OR merged_b OR
-    ext_a = ext_b) — the :func:`near_dup_pairs_multiprobe` rule
-    restricted to masked planes; when n_probes ≥ prefix_planes the
-    two operators are identical (the gate-SF regime, unit-pinned).
-    Recall: a d=1 pair is missed only when the differing plane is
-    outside BOTH rows' nearest-``n_probes`` sets — by construction
-    the least-likely-to-flip planes.
-
-    One Arrow kernel emits (signature, probe mask) per row
-    (:func:`hyperplane_bucket_probe_arrow`); candidate generation is
-    the same explode → equi join → bare-id distinct shape, with the
-    probe array filtered by the mask JVM-side, and the same
-    hot-bucket census cap and rounded-cosine verify tail."""
-    p, r = prefix_planes, split_r
-    assert p + 1 <= SIGNATURE_WORD_BITS and len(signs) <= SIGNATURE_WORD_BITS
-    sp = hyperplane_bucket_probe_arrow(F.col(vec_col), signs, p, n_probes)
-    df = ensure_scan_parallelism(df, n_rows)
-    bucketed = df.select(
-        F.col(id_col), F.col(vec_col), sp.alias("_sp")
-    ).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col("_sp.hp").alias("hp"),
-        F.col("_sp.probe_mask").alias("pm"),
-        fractional_key(F.col("_sp.hp"), p, r).alias("hpk"),
-    )
-    bucketed = _cache_signatures(bucketed)
-    hot = (
-        bucketed.groupBy("hpk")
-        .agg(F.count(F.lit(1)).alias("_bn"))
-        .where(F.col("_bn") > max_bucket)
-        .select("hpk")
-    )
-    bucketed = bucketed.join(F.broadcast(hot), on="hpk", how="left_anti")
-    prefix = F.col("hp").bitwiseAND(F.lit((1 << p) - 1).cast("bigint"))
-    ext = F.shiftright(F.col("hp"), p).bitwiseAND(F.lit(1).cast("bigint"))
-    keyed = lambda pref, e: fractional_key_parts(pref, e, r)  # noqa: E731
-    # exact key + extension flip always probe; prefix flip i only
-    # when bit i of the row's mask is set — filtered JVM-side before
-    # the explode so fan-out is n_probes+2, not p+2
-    probe_arr = F.array(
-        F.struct(F.col("hpk").alias("k"), F.lit(True).alias("keep")),
-        # ext flip only for UNMERGED prefixes: a merged row's flip
-        # keys identically to its exact probe (fractional_key_parts
-        # zeroes the ext term), which would re-enumerate the whole
-        # exact bucket — the Σdepth² candidate-join term — twice
-        # per direction (see near_dup_pairs_multiprobe; guide §2.3)
-        F.struct(
-            keyed(prefix, F.lit(1).cast("bigint") - ext).alias("k"),
-            ((prefix % 4) < F.lit(r)).alias("keep"),
+    ext_ok = unmerged if masked else unmerged & (ext == 0)
+    probes = F.array(
+        F.col("key"),
+        F.when(
+            ext_ok,
+            fractional_key_parts(prefix, F.lit(1).cast("bigint") - ext, r),
         ),
-        *[
-            F.struct(
-                keyed(
-                    prefix.bitwiseXOR(F.lit(1 << i).cast("bigint")), ext
-                ).alias("k"),
-                (
-                    F.shiftright(F.col("pm"), i).bitwiseAND(F.lit(1)) == 1
-                ).alias("keep"),
-            )
-            for i in range(p)
-        ],
+        *[flip(i) for i in range(p)],
     )
-    probes = bucketed.select(
-        F.col(id_col),
-        F.explode(F.filter(probe_arr, lambda s: s["keep"])).alias("pr"),
-    ).select(F.col(id_col), F.col("pr.k").alias("probe"))
-    exact = bucketed.select(
-        F.col(id_col).alias("item_id"), F.col("hpk").alias("probe")
-    )
-    cand = (
-        probes.join(exact, on="probe")
-        .where(F.col(id_col) != F.col("item_id"))
-        .select(
-            F.least(F.col(id_col), F.col("item_id")).alias("a_id"),
-            F.greatest(F.col(id_col), F.col("item_id")).alias("b_id"),
-        )
-        .distinct()
-    )
-    return _verify_pairs(cand, df, id_col, vec_col, threshold)
-
-
-#: Probe fan-out past which the multiprobe family switches to the
-#: bounded-T (Lv et al.) rule BY DEFAULT (VERDICT r9 item 1 — the
-#: last super-linear decade term). While the fractional prefix width
-#: p ≤ this, flipping EVERY prefix plane costs no more than the
-#: bounded rule would (fan-out p+2 ≤ T+2) and the two operators emit
-#: identical pairs (unit-pinned full-mask equivalence), so the gate
-#: changes nothing at small corpora — including both bench gates
-#: (p = 6 at 500 vectors, p = 8 at 2 000). Past it, each row probes
-#: only its T lowest-|dot| prefix planes: probe rows/input row is
-#: (T+2) = 10 at EVERY corpus size, killing the n·log n explode
-#: (11.1×/decade measured for the full-prefix rule, SCALING.md §7d).
-#: Same policy shape as ARROW_SIGNATURE_MIN_ROWS: a measured
-#: crossover constant + one pure function both engines restate.
-MULTIPROBE_BOUNDED_FANOUT = 8
-
-
-def near_dup_pairs_multiprobe_auto(
-    df: DataFrame,
-    signs,
-    prefix_planes: int,
-    split_r: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-    max_bucket: int = 4096,
-    n_rows: int | None = None,
-) -> DataFrame:
-    """Size-gated multiprobe: the full-prefix rule while its fan-out
-    is within :data:`MULTIPROBE_BOUNDED_FANOUT` (identical pair set,
-    and the expression-form signature kernel stays available for the
-    small-corpus fast path), the bounded-T rule past it — constant
-    probe volume per row at any scale. The gate is a pure function
-    of ``prefix_planes`` (itself a pure function of the corpus
-    count), so the DuckDB oracle needs NO branch: the bounded meet
-    rule with ``rnk <= T`` masks degenerates to the full symmetric
-    rule exactly when p ≤ T (every prefix plane ranks within T)."""
-    if prefix_planes <= MULTIPROBE_BOUNDED_FANOUT:
-        return near_dup_pairs_multiprobe(
-            df,
-            signs,
-            id_col=id_col,
-            vec_col=vec_col,
-            threshold=threshold,
-            max_bucket=max_bucket,
-            prefix_planes=prefix_planes,
-            split_r=split_r,
-            n_rows=n_rows,
-        )
-    return near_dup_pairs_multiprobe_bounded(
+    return _probe_join_pairs(
         df,
-        signs,
-        prefix_planes=prefix_planes,
-        split_r=split_r,
-        id_col=id_col,
-        vec_col=vec_col,
-        threshold=threshold,
-        max_bucket=max_bucket,
-        n_probes=MULTIPROBE_BOUNDED_FANOUT,
-        n_rows=n_rows,
+        sig,
+        F.array(fractional_key_parts(prefix, ext, r)),
+        probes,
+        id_col,
+        vec_col,
+        threshold,
+        max_bucket,
+        n_rows,
     )
 
 
@@ -1205,115 +888,54 @@ def near_dup_pairs_banded(
     n_rows: int | None = None,
     offset: int = 0,
 ) -> DataFrame:
-    """Banded (multi-signature) hyperplane LSH — the canonical
-    high-recall construction: ONE wide signature of ``len(signs)``
-    planes is sliced into ``n_bands`` disjoint bit-bands, and a pair
-    is a candidate when ANY band matches exactly. Per-band collision
-    s^P (s = 1-θ/π, P = band width) compounds to 1-(1-s^P)^R — the
-    recall knob orthogonal to the adaptive width: width buys
-    precision (bucket depth), bands buy recall, both at linear cost
-    (one explode to R (band, key) rows, equi self-join per band key,
-    distinct). Because bands are bit-slices of the SAME signature,
-    the plane matrix is computed once and the SQL oracle recovers
-    every band key by shifting the one embedded bucket value.
+    """Banded hyperplane LSH — the canonical high-recall
+    construction: ONE wide signature is sliced into ``n_bands``
+    disjoint bit-bands, and a pair is a candidate when ANY band
+    matches exactly. Per-band collision s^P (s = 1-θ/π, P = band
+    width) compounds to 1-(1-s^P)^R: width buys precision (bucket
+    depth), bands buy recall, both at linear cost. Each (row, band)
+    is a unit of :func:`_probe_join_pairs` whose only probe is its own
+    key, so a hot band key drops just that band of its rows. Because
+    bands are bit-slices of the same signature, the planes are
+    computed once and the SQL oracle recovers every band key by
+    slicing the one signature value.
 
-    Hot-bucket guard: (vec, band) rows whose band key's population
-    exceeds ``max_bucket`` are dropped (census groupBy + broadcast
-    anti join) — the vector keeps its other bands, so recall
-    degrades gracefully on adversarial data while per-key pair work
-    stays bounded; on non-adversarial data the adaptive width keeps
-    E[depth] far below the cap and the guard never binds (oracle
-    unaffected at every tested SF).
-
-    ``widths`` (optional) makes the resolution FRACTIONAL: band b is
-    the bit-slice [off_b, off_b+widths[b]) of the one signature, with
-    widths allowed to differ (the :func:`band_layout` W/W+1 split of
-    an :func:`adaptive_total_planes` count). One extra plane then
-    moves bucket depth of ONE band by 2× — total candidate work steps
-    by ~2^(1/n_bands) instead of 2×, flattening the integral
-    sawtooth (SCALING.md §7) while everything downstream (census cap,
-    bare-id candidate dedup, verify) is width-agnostic. Default
-    (None) keeps the legacy equal split of ``len(signs)``.
-
-    ``offset`` shifts every band slice up by that many planes —
-    band b then covers [offset + off_b, offset + off_b + w_b). The
-    plane statistics are identical (all planes are i.i.d. md5-parity
-    draws), so this changes WHICH independent signature the bands
-    read, not the construction; its purpose is pinning the
-    multi-word signature path (band keys in word 1 / straddling the
-    60-bit boundary) at corpus sizes whose adaptive totals would
-    otherwise stay inside word 0 — see sim_lsh_banded_hiword."""
+    ``widths`` makes the resolution fractional: band b is the slice
+    [off_b, off_b + widths[b]) with widths differing by at most one
+    (:func:`band_layout` of an :func:`adaptive_total_planes` count),
+    so one more plane doubles the depth of ONE band and candidate
+    work steps by ~2^(1/n_bands) instead of 2×. Zero-width bands
+    (corpora of ≤ ~13 rows) key every row to 0, which the census cap
+    bounds like any other key. ``None`` splits ``len(signs)`` evenly.
+    ``offset`` shifts every slice up by that many planes — planes are
+    i.i.d., so this reads a different but statistically identical
+    signature; it lets small corpora exercise band keys in word 1 and
+    across the 60-bit word boundary (``sim_lsh_banded_hiword``)."""
     if widths is None:
         assert offset == 0, "offset requires explicit widths"
-        total = len(signs)
-        assert total % n_bands == 0, "plane count must divide into bands"
-        p_band = total // n_bands
-        layout = [(r * p_band, p_band) for r in range(n_bands)]
-    else:
-        # the matrix may carry extra planes past the banded span
-        # (e.g. covering the recall harness's single-signature read).
-        # Zero-width bands (adaptive_total_planes < n_bands, i.e.
-        # corpus ≤ target·2^((n_bands-1)/n_bands) ≈ 13 rows at the
-        # defaults) degenerate to mask 0 = one all-pairs bucket —
-        # benign at those sizes, mirrored bit-exactly by the oracle's
-        # shifted-slice restatement, and bounded by max_bucket like
-        # any other key.
-        assert len(widths) == n_bands and offset + sum(widths) <= len(signs)
-        layout = []
-        off = offset
-        for w in widths:
-            layout.append((off, w))
-            off += w
-    # the signature may exceed one bigint word (total planes = the
-    # full quarter-step count Q ≤ MAX_QUARTER_STEPS) — carry it as
-    # ceil(P/60) words and slice band keys across the word boundary
-    df = ensure_scan_parallelism(df, n_rows)
-    bucketed = _cache_signatures(
-        df.select(
-            F.col(id_col),
-            F.col(vec_col),
-            hyperplane_bucket_words_auto(
-                F.col(vec_col), signs, n_rows
-            ).alias("hpw"),
-        )
-    )
+        assert len(signs) % n_bands == 0, "plane count must divide into bands"
+        widths = [len(signs) // n_bands] * n_bands
+    assert len(widths) == n_bands and offset + sum(widths) <= len(signs)
     words = [
-        F.element_at("hpw", w + 1)
-        for w in range(signature_n_words(len(signs)))
+        F.element_at("sig", w + 1) for w in range(signature_n_words(len(signs)))
     ]
-    keyed = bucketed.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).alias("band"),
-                        band_key_words(words, off, w).alias("key"),
-                    )
-                    for r, (off, w) in enumerate(layout)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, vec_col, "bk.band", "bk.key")
-    hot = (
-        keyed.groupBy("band", "key")
-        .agg(F.count(F.lit(1)).alias("_bn"))
-        .where(F.col("_bn") > max_bucket)
-        .select("band", "key")
+    bands, off = [], offset
+    for b, w in enumerate(widths):
+        bands.append(
+            F.struct(F.lit(b).alias("band"), band_key_words(words, off, w).alias("key"))
+        )
+        off += w
+    return _probe_join_pairs(
+        df,
+        hyperplane_signature(F.col(vec_col), signs, n_rows),
+        F.array(*bands),
+        F.array(F.col("key")),
+        id_col,
+        vec_col,
+        threshold,
+        max_bucket,
+        n_rows,
     )
-    keyed = keyed.join(F.broadcast(hot), on=["band", "key"], how="left_anti")
-    # bare-id candidates, distinct BEFORE vectors attach (a pair can
-    # match in several bands; see near_dup_pairs_multiprobe)
-    other = keyed.select(F.col(id_col).alias("item_id"), "band", "key")
-    cand = (
-        keyed.select(id_col, "band", "key")
-        .join(other, on=["band", "key"])
-        .where(F.col(id_col) < F.col("item_id"))
-        .select(F.col(id_col).alias("a_id"), F.col("item_id").alias("b_id"))
-        .distinct()
-    )
-    return _verify_pairs(cand, df, id_col, vec_col, threshold)
 
 
 def near_dup_pairs_blas(
@@ -1334,7 +956,7 @@ def near_dup_pairs_blas(
     pairwise work is intrinsically quadratic in its population, and
     one-task-per-bucket made the largest bucket a straggler — the
     sf1 sweep measured 16× wall-clock at 10× vectors because each
-    label bucket ran as ONE task (SCALING.md §6). Buckets larger
+    label bucket ran as ONE task. Buckets larger
     than ``split_bucket`` rows (a bounded census: groupBy count on
     the bucket key, broadcast back — the corpus itself never
     shuffles for the census) hash their rows into ``n_blocks``
@@ -1402,7 +1024,10 @@ def near_dup_pairs_blas(
             {"a_id": lo, "b_id": hi, "raw_cos": sims[ai, bi]}
         )
 
-    base = df.select(F.col(bucket_col), F.col(id_col), F.col(vec_col))
+    # a NULL embedding pairs with nothing (the HOF form's NULL cosine)
+    base = df.select(F.col(bucket_col), F.col(id_col), F.col(vec_col)).where(
+        F.col(vec_col).isNotNull()
+    )
     census = base.groupBy(bucket_col).agg(F.count(F.lit(1)).alias("_bn"))
     big = F.col("_bn") > F.lit(split_bucket)
     blk = F.when(

@@ -1602,21 +1602,19 @@ def q_sim_lsh_multiprobe(spark, sf_dir):
     instead of holding depth alone, so the measured 3× ratio stays
     ~linear instead of drifting by the log-n fan-out.
 
-    r10 (VERDICT item 1 — the last super-linear cell): the probe
-    rule is SIZE-GATED to the bounded-T form. While p ≤ 8 (both
-    bench gates: p = 6 at 500 vectors, 8 at 2 000) every prefix
-    plane is probed and the pair set — and recorded results — are
-    unchanged; past it each row probes only its 8 lowest-|dot|
-    prefix planes (Lv et al.), so probe rows/input row is ≤ 10 at
-    EVERY corpus size and the explode is linear, not n·log n (the
-    11.1×/decade residual, SCALING.md §7d). One oracle covers both
-    regimes: the bounded meet rule's rnk ≤ 8 masks are full exactly
-    when p ≤ 8, degenerating to the old symmetric predicate."""
+    The probe rule is SIZE-GATED: while p ≤ 8 (p = 6 at 500 vectors,
+    8 at 2 000) every prefix plane is probed; past it each row probes
+    only its 8 lowest-|dot| prefix planes (Lv et al.), so probe rows
+    per input row stay ≤ 10 at every corpus size and the explode is
+    linear, not n·log n (near_dup_pairs_multiprobe's ``n_probes``).
+    One oracle covers both regimes: the bounded meet rule's rnk ≤ 8
+    masks are full exactly when p ≤ 8, where it is the symmetric
+    predicate."""
     emb = _t(spark, sf_dir, "embeddings")
     signs, p, r, n = _multiprobe_signs(
         emb, table_rows(spark, sf_dir, "embeddings")
     )
-    return similarity.near_dup_pairs_multiprobe_auto(
+    return similarity.near_dup_pairs_multiprobe(
         emb, signs, prefix_planes=p, split_r=r, threshold=0.2, n_rows=n
     )
 
@@ -1643,30 +1641,19 @@ def q_sim_lsh_multiprobe_bounded(spark, sf_dir):
     in A's mask and (merged_b OR ext_a = ext_b), or symmetrically
     for B.
 
-    ROLE (r11, VERDICT r10 item 3): this query is the COVERAGE pin
-    of the bounded-T rule — the production default is
-    ``sim_lsh_multiprobe``'s size-gated auto form, which this
-    operator backs past the gate. It deliberately keeps the
-    DEPTH-CONSTANT split (depth 8) rather than the default's
-    fan-out-normalized one, so its per-row probe work equals the
-    default's at T=8 but its buckets run ~2× deeper at large n.
-    r12 closed the super-linear-decade flag this query carried: the
-    r11-measured "candidate join+distinct" wall was the candidate
-    stage running at the SCAN's deficient parallelism (one small
-    parquet file → ≤7 of 32 cores through signature kernel, probe
-    explode and meeting enumeration — everything below it is a
-    broadcast join; `partitioning.ensure_scan_parallelism` now
-    guards it) plus the merged-row ext-flip duplicate probe
-    re-enumerating every same-bucket meeting. Decade now 6.4×
-    (tools/sf10_trend_r12.jsonl: 2.29 s sf1 → 14.58 s sf10, was
-    11.5×), SCALING.md §7h; the verify tail stays HOF — a
-    vectorized form was measured SLOWER (Arrow pair transfer
-    dominates — OPTIMIZATION_r11.md, rejected change #1)."""
+    This query is the coverage pin of the bounded-T rule, which
+    ``sim_lsh_multiprobe`` runs past its gate. It keeps the
+    DEPTH-CONSTANT split (depth 8) rather than the fan-out-normalized
+    one, so its per-row probe work equals the default's at T=8 but
+    its buckets run ~2× deeper at large n. Both go through
+    near_dup_pairs_multiprobe with ``n_probes=8``: at p ≤ 8 (every
+    gate SF) the mask would cover every prefix plane, so the full rule
+    runs and emits the same pairs."""
     emb = _t(spark, sf_dir, "embeddings")
     n = table_rows(spark, sf_dir, "embeddings")
     p, r = similarity.fractional_split(n, target_bucket=8)
     signs = similarity.hyperplane_signs(p + (1 if r else 0), 64)
-    return similarity.near_dup_pairs_multiprobe_bounded(
+    return similarity.near_dup_pairs_multiprobe(
         emb, signs, prefix_planes=p, split_r=r, threshold=0.2, n_probes=8,
         n_rows=n,
     )
@@ -1750,9 +1737,9 @@ HIWORD_OFFSET = 58
 def q_sim_lsh_banded_hiword(spark, sf_dir):
     """Banded hyperplane LSH with the band slices shifted to bits
     [58, 58+Q) of a wider signature — the ORACLE-BEARING coverage
-    query for the r9 multi-word signature path
-    (similarity.hyperplane_bucket_words / band_key_words /
-    MAX_QUARTER_STEPS=120, VERDICT r8 item 1). All planes are i.i.d.
+    query for the multi-word signature path
+    (similarity.hyperplane_signature / band_key_words /
+    MAX_QUARTER_STEPS=120). All planes are i.i.d.
     md5-parity draws, so the construction and its statistics are
     exactly sim_lsh_banded's — same adaptive quarter-step total, same
     W/W+1 band layout, same census cap and verify — but every band
@@ -1830,7 +1817,7 @@ def q_sim_lsh_recall(spark, sf_dir):
     sig = emb.select(
         "vec_id",
         "embedding",
-        similarity.hyperplane_bucket_words_auto(
+        similarity.hyperplane_signature(
             F.col("embedding"), signs4, n_emb
         ).alias("hpw"),
     )

@@ -2459,8 +2459,8 @@ ORACLES["dedup_ngram_containment"] = (
 
 
 # Multi-probe candidate rule over the fan-out-normalized fractional
-# split. r10: ONE oracle covers the size-gated default
-# (similarity.near_dup_pairs_multiprobe_auto) at every corpus size —
+# split. ONE oracle covers the size-gated default
+# (similarity.near_dup_pairs_multiprobe, n_probes=8) at every corpus size —
 # the bounded per-direction meet rule with rnk <= 8 masks. While the
 # prefix width p2 <= 8 (both oracle gates) every prefix plane ranks
 # within 8, the masks are FULL, and the rule degenerates to the old

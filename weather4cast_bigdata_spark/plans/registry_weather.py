@@ -574,7 +574,9 @@ def q_dedup_embedding_cosine(spark, sf_dir):
         F.concat_ws(
             "|",
             F.col("label"),
-            similarity.hyperplane_bucket_auto(F.col("embedding"), signs, n),
+            F.element_at(
+                similarity.hyperplane_signature(F.col("embedding"), signs, n), 1
+            ),
         ).alias("bkt"),
     )
     return similarity.near_dup_pairs_blas(bucketed, bucket_col="bkt", threshold=0.2)
