@@ -152,15 +152,11 @@ def frame_stream_dir(spark, tmp_path):
 
 
 def _run_stream(q_df, name):
-    q = (
+    streaming.drain(
         q_df.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete" if name.startswith("agg") else "append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
-    return q
 
 
 def test_sliding_sequence_windows(spark, frame_stream_dir):
@@ -289,40 +285,124 @@ def test_csv_roundtrip_quotes_newlines_nulls(spark, tmp_path):
     assert got == {r[0]: r[1] for r in rows}
 
 
-def test_stateful_assembly_orders_late_frames(spark, tmp_path):
-    """A frame delivered late (but inside the watermark) lands at its
-    event-time position: emitted windows are time-ordered and end at
-    the late frame, never an arrival-ordered buffer."""
-    t0 = dt.datetime(2019, 7, 23, 21, 0, 0)
-    m = dt.timedelta(minutes=15)
-    batch1 = [("R1", t0 + i * m, float(i)) for i in (0, 1, 3)]
-    late = [("R1", t0 + 2 * m, 2.0)]
-    df1 = spark.createDataFrame(batch1, ["region", "ts", "mean_value"])
-    df2 = spark.createDataFrame(late, ["region", "ts", "mean_value"])
-    path = str(tmp_path / "late_in")
-    df1.coalesce(1).write.parquet(path)
-    df2.coalesce(1).write.mode("append").parquet(path)
+_T0 = dt.datetime(2019, 7, 23, 21, 0, 0)
+_M = dt.timedelta(minutes=15)
+
+
+def _ewma_ref(window, alpha):
+    """EWMA of a window, newest frame first (k = 0, 1, ...), summed in
+    the batch lag chain's order."""
+    num = sum(v * alpha**k for k, v in enumerate(reversed(window)))
+    den = sum(alpha**k for k in range(len(window)))
+    return num / den
+
+
+def _buffer_reference(batches, size, min_len, fn):
+    """Driver-side restatement of the event-time buffer for one key:
+    micro-batches in arrival order, each sorted by event time; every
+    arriving frame joins the buffered frames, each not-yet-emitted
+    frame whose window (up to ``size`` frames ending at it) holds at
+    least ``min_len`` frames emits ``fn(window)``, then only the newest
+    ``size`` frames stay buffered."""
+    buf, out = [], {}
+    for batch in batches:
+        for ts, v in sorted(batch):
+            buf = sorted(buf + [(ts, v)])
+            for j, (t, _) in enumerate(buf):
+                window = [x for _, x in buf[max(0, j + 1 - size) : j + 1]]
+                if t not in out and len(window) >= min_len:
+                    out[t] = fn(window)
+            buf = buf[-size:]
+    return out
+
+
+#: Per case: micro-batches of frame offsets i, and the value scale
+#: (value = scale * i). ``late`` delivers t2 after t3; ``two_fills``
+#: fills t1 and then t3 in two later micro-batches, each completing a
+#: window that ends at a frame buffered before it, and runs past the
+#: buffer size. Its 0.1 scale makes the t5 EWMA depend on the order of
+#: its floating-point sum, so exact equality pins the k = 0, 1, ...
+#: accumulation order.
+_BUFFER_CASES = {
+    "late": ([(0, 1, 3), (2,)], 1.0),
+    "two_fills": ([(0, 2, 4), (1,), (3, 5)], 0.1),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_BUFFER_CASES))
+@pytest.mark.parametrize("wrapper", ["assembly", "ewma"])
+def test_event_time_buffer_late_frames(spark, tmp_path, wrapper, case):
+    """Both wrappers of the event-time buffer, fed one file per
+    micro-batch so late frames ride later batches: a late frame lands
+    at its event-time position (windows are time-ordered and end at
+    the right frame), an interior fill completes windows ending at
+    frames already buffered, every frame emits at most once and an
+    emitted value is never retracted (append-mode emit-once). The
+    drained rows equal a driver-side restatement of the buffer."""
+    offsets, scale = _BUFFER_CASES[case]
+    batches = [[(_T0 + i * _M, scale * i) for i in b] for b in offsets]
+    path = str(tmp_path / "buffer_in")
+    seen: set[str] = set()
+    for k, batch in enumerate(batches):
+        spark.createDataFrame(
+            [("R1", ts, v) for ts, v in batch], ["region", "ts", "value"]
+        ).coalesce(1).write.mode("append").parquet(path)
+        # distinct modification times pin the file source's order:
+        # one file per micro-batch, in list order
+        for f in set(os.listdir(path)) - seen:
+            if f.startswith("part-"):
+                os.utime(os.path.join(path, f), (1.7e9 + 10 * k,) * 2)
+        seen = set(os.listdir(path))
     st = (
         spark.readStream.format("parquet")
-        .schema(df1.schema)
-        # one file per micro-batch: the late frame MUST ride a later
-        # batch than t0/t1/t3, exercising the interior-gap-fill path
+        .schema("region string, ts timestamp, value double")
         .option("maxFilesPerTrigger", 1)
         .load(path)
     )
-    seqs = streaming.stateful_sequence_assembly(st, n_past=4)
-    _run_stream(seqs, "append_late")
-    got = spark.sql("SELECT seq_end_ts, seq_values FROM append_late").collect()
-    # regardless of which micro-batch the late frame rode in, any
-    # emitted full window must be in time order
-    for r in got:
-        assert r.seq_values == sorted(r.seq_values) or len(set(r.seq_values)) < 4
-    full = [r for r in got if len(r.seq_values) == 4]
-    # the interior t2 fill completes the window ending at the
-    # ALREADY-buffered t3 — it must be emitted, not dropped
-    assert len(full) == 1
-    assert full[0].seq_values == [0.0, 1.0, 2.0, 3.0]
-    assert full[0].seq_end_ts == t0 + 3 * m
+    name = f"buffer_{wrapper}_{case}"
+    if wrapper == "assembly":
+        size, min_len, fn = 4, 4, list
+        out = streaming.stateful_sequence_assembly(
+            st.withColumnRenamed("value", "mean_value"), n_past=4
+        )
+        _run_stream(out, name)
+        rows = spark.sql(f"SELECT seq_end_ts, seq_values FROM {name}").collect()
+    else:
+        size, min_len = (8 if case == "late" else 3), 1
+
+        def fn(w):
+            return _ewma_ref(w, 0.5)
+
+        out = streaming.ewma_stream(st, alpha=0.5, lookback=size)
+        _run_stream(out, name)
+        rows = spark.sql(f"SELECT ts, raw_ewma FROM {name}").collect()
+    got = {r[0]: r[1] for r in rows}
+    assert len(got) == len(rows)  # every frame emits at most once
+    assert got == _buffer_reference(batches, size, min_len, fn)
+    if wrapper == "assembly":
+        # any emitted window is in event-time order
+        assert all(v == sorted(v) for v in got.values())
+    if case == "late" and wrapper == "assembly":
+        # the interior t2 fill completes the window ending at the
+        # ALREADY-buffered t3 — it must be emitted, not dropped
+        assert len(got) == 1
+        assert got[_T0 + 3 * _M] == [0.0, 1.0, 2.0, 3.0]
+    if case == "late" and wrapper == "ewma":
+        assert len(got) == 4  # every frame scored exactly once
+        assert got[_T0] == 0.0
+        # t3 scored on arrival over {0,1,_,3}: (3 + .5*1 + .25*0)/1.75
+        assert abs(got[_T0 + 3 * _M] - 3.5 / 1.75) < 1e-9
+        # the late t2 scored at its true position over {0,1,2}
+        assert abs(got[_T0 + 2 * _M] - (2 + 0.5 * 1 + 0.25 * 0) / 1.75) < 1e-9
+    if case == "two_fills" and wrapper == "assembly":
+        # the t1 fill completes t4's window, the t3 fill its own; t4
+        # keeps its first window (no retraction), and t5 emits after
+        # the buffer has been trimmed
+        assert got == {
+            _T0 + 4 * _M: [0.1 * i for i in (0, 1, 2, 4)],
+            _T0 + 3 * _M: [0.1 * i for i in (0, 1, 2, 3)],
+            _T0 + 5 * _M: [0.1 * i for i in (2, 3, 4, 5)],
+        }
 
 
 def test_audio_features_null_row_skipped(spark):
@@ -408,38 +488,6 @@ def test_audio_waveform_real_soundfile_branch(monkeypatch):
     assert wav.shape == (3,)
     np.testing.assert_allclose(wav, [0.5, 0.5, -0.5])
     assert multimodal._audio_waveform(b"garbage", n_fallback=4) is None
-
-
-def test_ewma_stream_late_frame_emits_once(spark, tmp_path):
-    """The streaming EWMA mirrors the assembly's late-frame rules: a
-    late interior frame is scored at its event-time position, and an
-    already-emitted later score is NOT retracted (append-mode
-    emit-once: the t3 score keeps the value computed before t2
-    arrived)."""
-    t0 = dt.datetime(2019, 7, 23, 21, 0, 0)
-    m = dt.timedelta(minutes=15)
-    batch1 = [("R1", t0 + i * m, float(i)) for i in (0, 1, 3)]
-    late = [("R1", t0 + 2 * m, 2.0)]
-    df1 = spark.createDataFrame(batch1, ["region", "ts", "value"])
-    df2 = spark.createDataFrame(late, ["region", "ts", "value"])
-    path = str(tmp_path / "ewma_late_in")
-    df1.coalesce(1).write.parquet(path)
-    df2.coalesce(1).write.mode("append").parquet(path)
-    st = (
-        spark.readStream.format("parquet")
-        .schema(df1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(path)
-    )
-    scored = streaming.ewma_stream(st, alpha=0.5, lookback=8)
-    _run_stream(scored, "ewma_late")
-    got = {r.ts: r.raw_ewma for r in spark.sql("SELECT ts, raw_ewma FROM ewma_late").collect()}
-    assert len(got) == 4  # every frame scored exactly once
-    assert got[t0] == 0.0
-    # t3 scored on arrival over {0,1,_,3}: (3 + .5*1 + .25*0)/1.75
-    assert abs(got[t0 + 3 * m] - 3.5 / 1.75) < 1e-9
-    # the late t2 scored at its true position over {0,1,2}
-    assert abs(got[t0 + 2 * m] - (2 + 0.5 * 1 + 0.25 * 0) / 1.75) < 1e-9
 
 
 # --- incremental LSH ingest (lsh_ingest) ------------------------------------
@@ -736,6 +784,93 @@ def test_exact_dedup_ingest_replay_idempotent(spark, tmp_path, exdup_docs):
     assert spark.read.parquet(str(d / "index")).count() == before_i
 
 
+# --- the shared exactly-once protocol ----------------------------------------
+
+
+def _rows(spark, path):
+    """Every row under ``path`` (batch_id recovered as a column),
+    sorted, duplicates kept."""
+    return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+
+@pytest.mark.parametrize("ingest", ["lsh_ingest", "exact_dedup_ingest"])
+def test_failed_ingest_batch_releases_cached_frame(
+    spark, tmp_path, exdup_docs, ingest
+):
+    """A micro-batch whose matches write fails (``matches_dir`` is a
+    regular file) raises out of the drain and leaves nothing in the
+    session's cache: the batch's persisted keys are released on the
+    failure path too."""
+    from pyspark.errors import StreamingQueryException
+
+    src = str(tmp_path / "src")
+    exdup_docs.repartition(4).write.parquet(src)
+    blocker = tmp_path / "matches"
+    blocker.write_text("a regular file, not a directory")
+    # start from an empty cache, so the check sees only this ingest
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    with pytest.raises(StreamingQueryException):
+        getattr(streaming, ingest)(
+            spark, src, exdup_docs.schema, str(tmp_path / "index"),
+            str(blocker), str(tmp_path / "ckpt"),
+        )
+    assert cache.isEmpty()
+
+
+@pytest.mark.parametrize("ingest", ["lsh_ingest", "exact_dedup_ingest"])
+def test_partial_commit_replays_batch(spark, tmp_path, exdup_docs, ingest):
+    """Batch 0 committed its matches but not its index (the index
+    ``_SUCCESS`` is gone): a re-run with a fresh checkpoint must run
+    batch 0 again, and the drained matches and index equal the first
+    run's row for row — the rerun probes only earlier batches' index
+    shards, so it adds no pair a later batch already emitted."""
+    src = str(tmp_path / "src")
+    # 64 files -> two 32-file micro-batches, so later shards exist
+    exdup_docs.repartition(64).write.parquet(src)
+    index_dir, matches_dir = str(tmp_path / "index"), str(tmp_path / "matches")
+    run = getattr(streaming, ingest)
+    run(spark, src, exdup_docs.schema, index_dir, matches_dir, str(tmp_path / "c1"))
+    matches, index = _rows(spark, matches_dir), _rows(spark, index_dir)
+    assert len({m[-1] for m in matches}) == 2, "fixture must drain in 2 batches"
+    assert len(set(matches)) == len(matches)
+    marker = os.path.join(index_dir, "batch_id=0", "_SUCCESS")
+    os.remove(marker)
+    run(spark, src, exdup_docs.schema, index_dir, matches_dir, str(tmp_path / "c2"))
+    assert os.path.exists(marker)  # batch 0 ran again
+    assert _rows(spark, matches_dir) == matches
+    assert _rows(spark, index_dir) == index
+
+
+def test_submission_ingest_partial_commit_replays_batch(
+    spark, tmp_path, sub_cells
+):
+    """Batch 0 staged its cells but did not commit its manifest: a
+    re-run with a fresh checkpoint must run batch 0 again, and the
+    drained files and manifest equal the first run's."""
+    src = str(tmp_path / "src")
+    sub_cells.repartition(64).write.parquet(src)
+    staging, sub_dir, mani, _ = _sub_dirs(tmp_path, "partial")
+    args = (spark, src, sub_cells.schema, staging, sub_dir, mani)
+    streaming.submission_ingest(*args, str(tmp_path / "c1"), _SUB_VARS)
+
+    def drained():
+        rows = streaming.submission_manifest(spark, mani).collect()
+        return sorted(map(tuple, rows))
+
+    files, manifest = _file_arrays(sub_dir), drained()
+    marker = os.path.join(mani, "batch_id=0", "_SUCCESS")
+    os.remove(marker)
+    streaming.submission_ingest(*args, str(tmp_path / "c2"), _SUB_VARS)
+    assert os.path.exists(marker)  # batch 0 ran again
+    assert drained() == manifest
+    got = _file_arrays(sub_dir)
+    assert set(got) == set(files) and files
+    for rel in files:
+        assert np.array_equal(got[rel], files[rel]), rel
+
+
 def test_watermark_boundary_drops_beyond_late_frame(spark, tmp_path):
     """The drop/keep boundary of the 24h-class watermark, pinned
     across TWO triggers (VERDICT r7 item 7): a frame later than the
@@ -765,15 +900,12 @@ def test_watermark_boundary_drops_beyond_late_frame(spark, tmp_path):
         win = streaming.sliding_sequence_windows(
             st, span="15 minutes", slide="15 minutes", watermark="1 hour"
         ).select("region", "win.start", "win.end", "n_frames")
-        q = (
+        streaming.drain(
             win.writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(120)
 
     drain()  # wave 1: watermark advances to 22:30 at batch end
     wave2 = [

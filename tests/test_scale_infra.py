@@ -37,8 +37,8 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = bucketed.colocated_join(
-            spark, f"t_li_{tag}", f"t_ord_{tag}",
+        joined = spark.table(f"t_li_{tag}").join(
+            spark.table(f"t_ord_{tag}"),
             on=[F.col("l_orderkey") == F.col("o_orderkey")],
         )
         plan = _plan(joined)
@@ -238,29 +238,6 @@ def test_cosine_topk_blas_over_budget_fails_fast(spark):
         cosine_topk_blas(vecs, vecs, max_index_rows=10)
     # under budget the same call plans fine
     assert cosine_topk_blas(vecs.limit(4), vecs.limit(4), k=2).count() == 8
-
-
-def test_predict_batch_udf_path(spark):
-    """pyspark.ml predict_batch_udf wrapper: same linear-stub contract
-    as predict_frames — standard serving path for tensor-in/out
-    models."""
-    import numpy as np
-
-    from weather4cast_bigdata_spark.operators import inference
-
-    df = spark.range(100).select(
-        F.col("id"),
-        (F.col("id") * 0.01).alias("f1"),
-        (F.col("id") * 0.02).alias("f2"),
-    )
-    w = np.array([2.0, -1.0])
-    out = inference.predict_frames_batch_udf(
-        df, ["f1", "f2"], lambda: inference.linear_stub_model(w)
-    )
-    bad = out.where(
-        F.abs(F.col("pred") - (F.col("f1") * 2.0 - F.col("f2"))) > 1e-12
-    ).count()
-    assert bad == 0
 
 
 def test_range_join_binned_matches_nested_loop(spark):

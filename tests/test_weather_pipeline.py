@@ -186,25 +186,6 @@ def test_region_constants_match_reference(spark):
     assert {r.region for r in dim.collect()} == set(regions.REGION_COORDINATES)
 
 
-def test_render_frame_grid_import_gate():
-    """Without matplotlib the renderer must fail with a clear
-    NotImplementedError (never an ImportError mid-plot); the data op
-    stays fully usable."""
-    import pandas as pd
-    import pytest as _pytest
-
-    from weather4cast_bigdata_spark.plans.plots import render_frame_grid
-
-    try:
-        import matplotlib  # noqa: F401
-        _pytest.skip("matplotlib present; gate not exercised")
-    except ImportError:
-        pass
-    pdf = pd.DataFrame({"panel_idx": [0], "t_offset": [-2], "y": [0], "x": [0], "value": [0.5]})
-    with _pytest.raises(NotImplementedError):
-        render_frame_grid(pdf, "/tmp/_w4c_grid.pdf")
-
-
 def test_h5_submission_readback_matches_quantized_cells(decoded, fx, tmp_path):
     """Interchange parity (datasets.py:444-459): every (region, day)
     submission file read back must hold exactly the quantized cells at

@@ -68,51 +68,6 @@ def predict_frames(
     return df.mapInPandas(run, schema=schema)
 
 
-def predict_frames_batch_udf(
-    df: DataFrame,
-    feature_cols: list[str],
-    model_factory: Callable[[], ModelFn],
-    out_col: str = "pred",
-    batch_size: int = 32,
-) -> DataFrame:
-    """Same contract as :func:`predict_frames`, via Spark ML's
-    ``pyspark.ml.functions.predict_batch_udf`` — the standard DL-model
-    serving path (reference main.py:139,187 runs real Keras eval; a
-    ``tf.keras.models.load_model`` closure drops into
-    ``model_factory`` unchanged).
-
-    predict_batch_udf caches the loaded model per Python worker across
-    batches AND across queries (its internal model cache), re-chunks
-    Arrow batches to ``batch_size``, and handles the scalar-columns →
-    stacked-ndarray marshalling — preferable to the hand-rolled
-    mapInPandas when the model is a standard tensor-in/tensor-out
-    black box; ``predict_frames`` remains for models needing custom
-    pre/post-processing inside the stage.
-    """
-    from pyspark.ml.functions import predict_batch_udf  # ships with pyspark
-
-    def make_predict_fn():
-        model = model_factory()
-
-        def predict(x: np.ndarray) -> np.ndarray:
-            return np.asarray(model(np.asarray(x, dtype=np.float64)), dtype=np.float64)
-
-        return predict
-
-    # feature columns ride as ONE (batch, n_features) tensor input —
-    # predict_batch_udf's tensor contract (input_tensor_shapes), the
-    # same layout model.predict sees in the reference
-    udf = predict_batch_udf(
-        make_predict_fn,
-        return_type=DoubleType(),
-        batch_size=batch_size,
-        input_tensor_shapes=[[len(feature_cols)]],
-    )
-    return df.withColumn(
-        out_col, udf(F.array(*[F.col(c).cast("double") for c in feature_cols]))
-    )
-
-
 def crr_combo_switch(
     df: DataFrame,
     group_cols: list[str],

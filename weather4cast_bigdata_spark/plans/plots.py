@@ -4,9 +4,9 @@ The reference's ``plot_sequence`` (plots.py:12-51) picks specific
 frames out of a 4+32 sequence — past positions (1, 3) and future
 positions (0, 2, 7, 15, 31) — and lays them out as an image grid.
 The DATA side of that is a positional filter over the time axis
-(SURVEY.md §2.6 note), which is an engine operator; the pixel
-rendering is matplotlib, import-gated here because plotting libs are
-optional at runtime.
+(SURVEY.md §2.6 note), which is an engine operator. The selected
+panels are tiny and render-ready for any driver-side imaging backend;
+the package itself draws nothing.
 """
 
 from __future__ import annotations
@@ -60,32 +60,3 @@ def frame_grid_data(
         panel = F.when(F.col("__pos") == p, F.lit(i)).otherwise(panel)
         t_off = F.when(F.col("__pos") == p, F.lit(titles[i])).otherwise(t_off)
     return out.withColumn("panel_idx", panel).withColumn("t_offset", t_off).drop("__pos")
-
-
-def render_frame_grid(grid_pdf, out_path: str, value_col: str = "value"):  # pragma: no cover
-    """Render the selected frames to a PDF (plots.py:18-51 analog).
-
-    Driver-side matplotlib over the already-tiny selected panel set;
-    import-gated — the engine never requires a plotting backend.
-    """
-    try:
-        from matplotlib import colors, pyplot as plt  # type: ignore
-    except ImportError as e:  # matplotlib absent in this container
-        raise NotImplementedError(
-            "matplotlib not available; frame_grid_data() output is "
-            "render-ready — plug any imaging backend here"
-        ) from e
-    panels = sorted(grid_pdf["panel_idx"].unique())
-    # squeeze=False: a single surviving panel must still yield an
-    # iterable axes row (bare Axes is not iterable)
-    fig, axes = plt.subplots(1, len(panels), figsize=(17, 5), squeeze=False)
-    for ax, p in zip(axes[0], panels):
-        sub = grid_pdf[grid_pdf["panel_idx"] == p].pivot(
-            index="y", columns="x", values=value_col
-        )
-        ax.imshow(sub.to_numpy(), norm=colors.Normalize(0, 1))
-        t = grid_pdf[grid_pdf["panel_idx"] == p]["t_offset"].iloc[0]
-        ax.set_title(f"T={'+' if t > 0 else ''}{t}")
-        ax.tick_params(left=False, bottom=False, labelleft=False, labelbottom=False)
-    fig.savefig(out_path, bbox_inches="tight")
-    plt.close(fig)

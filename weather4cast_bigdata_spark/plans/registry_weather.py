@@ -1052,20 +1052,10 @@ _SLOTS_CTE = f"""
 
 
 def _run_to_table(win, name: str, mode: str):
-    q = (
-        win.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # processAllAvailable + stop instead of awaitTermination: a
-    # stateful query with ProcessingTimeTimeout pending never
-    # self-terminates under availableNow, so a plain awaitTermination
-    # would burn its whole timeout budget every run.
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(60)
+    """Drain ``win`` into the memory table ``name``."""
+    from weather4cast_bigdata_spark.streaming import pipeline as streaming
+
+    streaming.drain(win.writeStream.format("memory").queryName(name).outputMode(mode))
 
 
 @qdef(
@@ -1770,17 +1760,13 @@ def q_streaming_checkpoint_resume(spark, sf_dir):
     )
 
     def drain():
-        q = (
+        streaming.drain(
             streaming.frame_stream(spark, src, schema)
             .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.processAllAvailable()
-        q.stop()
 
     half_a.coalesce(2).write.mode("overwrite").parquet(src)
     # drop the batch-write _SUCCESS marker noise; the file source

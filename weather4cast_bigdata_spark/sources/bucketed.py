@@ -8,6 +8,10 @@ for the joins that repeat every run (frames ⋈ static grids on
 ``(region, ts)``, lineitem ⋈ orders on the order key): pay one
 shuffle at ingest, never again.
 
+A plain ``spark.table(l).join(spark.table(r), on)`` of two such
+catalog tables then plans with no Exchange on either side
+(asserted in tests/test_scale_infra.py).
+
 Spark requires ``saveAsTable`` for bucketed writes (the bucket spec
 lives in the catalog, not the files); ``option("path", ...)`` keeps
 the data in caller-controlled storage with the session catalog only
@@ -20,7 +24,7 @@ mirrors ``datasets.py:256-269``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -41,16 +45,3 @@ def write_bucketed(
     if path is not None:
         w = w.option("path", path)
     w.saveAsTable(table)
-
-
-def colocated_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    on: list[str],
-    how: str = "inner",
-) -> DataFrame:
-    """Join two identically-bucketed catalog tables on their bucket
-    key. With matching bucket counts the physical plan contains no
-    Exchange for either side (asserted in tests/test_bucketed.py)."""
-    return spark.table(left_table).join(spark.table(right_table), on=on, how=how)

@@ -1,28 +1,46 @@
-"""Structured Streaming forms of the batch pipeline (SURVEY.md §2.5
-streaming note, §7 M6).
+"""Structured Streaming forms of the batch pipeline.
 
 The reference's cadence is one frame / 15 min / (region, product)
-(``datasets.py:175``); the live reading of its pipeline is:
+(``datasets.py:175``). The live reading of its pipeline is
+file-arrival micro-batches over the same partitioned lake, sliding
+windows for sequence assembly with a ~24 h watermark covering the
+previous-day fallback tolerance (``datasets.py:430-435``), and
+running aggregates for the ensemble's incremental Gram statistics
+(``ensemble.py:26-41``). The batch operators are pure DataFrame
+transforms, so most of them compose onto ``readStream`` unchanged.
 
-- file-arrival micro-batches over the same partitioned lake,
-- sliding 36-slot windows (9 h span, 15-min slide) for sequence
-  assembly, with a ~24 h watermark covering the previous-day
-  fallback tolerance (``datasets.py:430-435``),
-- update-mode running aggregates for the ensemble's incremental
-  Gram statistics (``ensemble.py:26-41``).
+Two mechanisms carry the rest, each written once:
 
-Because the batch operators are pure DataFrame transforms, they
-compose onto ``readStream`` unchanged — that is the payoff of the
-DataFrame-pure design.
+- **One event-time rolling buffer** (``_event_time_buffer``), the
+  module's only ``applyInPandasWithState`` operator. Per region it
+  keeps the last ``size`` frames in event-time order, inserts late
+  frames at their true position, emits every window of at least
+  ``min_len`` frames exactly once and expires state on an event-time
+  TTL. ``stateful_sequence_assembly`` and ``ewma_stream`` differ only
+  in ``size``, ``min_len`` and what they emit per window.
+- **One exactly-once micro-batch protocol.** A ``foreachBatch`` ingest
+  writes deterministic overwrites under ``batch_id=N`` directories and
+  skips a replayed batch only when every one of its outputs is
+  committed (``_committed``); a partly committed batch runs again and
+  rewrites the same bytes. ``drain`` runs a query availableNow to
+  completion and always stops it. ``lsh_ingest`` and
+  ``exact_dedup_ingest`` are key-set builders on one index-probe ingest
+  (``_index_probe_ingest``); ``submission_ingest`` uses the protocol
+  with its own staging and rewrite.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+import bisect
+import operator
+import os
+from collections.abc import Callable, Iterator, Sequence
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
@@ -103,6 +121,94 @@ def running_gram_stats(
     )
 
 
+#: Per-key state of ``_event_time_buffer``: the buffered frames'
+#: event times (µs), values and emitted flags, in event-time order.
+_BUFFER_STATE = "ts_list array<bigint>, val_list array<double>, em_list array<boolean>"
+
+
+def _event_time_buffer(
+    stream: DataFrame,
+    ts_col: str,
+    value_col: str,
+    size: int,
+    min_len: int,
+    emit: Callable[[list[float]], object],
+    out_ts: str,
+    out_name: str,
+    out_type: str,
+    state_ttl: str,
+    watermark: str,
+) -> DataFrame:
+    """Per-region rolling buffer of the last ``size`` frames in
+    event-time order. For every buffered frame whose window (the up to
+    ``size`` frames ending at it) holds at least ``min_len`` frames,
+    emits one ``(region, out_ts, out_name)`` row: the frame's event
+    time and ``emit(window)``, of SQL type ``out_type``.
+
+    - A late frame inside the watermark is inserted at its event-time
+      position, so windows are always time-ordered and never follow
+      arrival order.
+    - An interior insert (a gap fill) can complete windows ending at
+      frames already buffered, so every not-yet-emitted frame from the
+      insert point on is checked, not just the arriving one.
+    - Emission is append-only and first-wins: a window emitted before a
+      later interior fill is not retracted. Each frame's emitted flag
+      lives in the state beside it.
+    - The buffer is trimmed to ``size`` frames after every insert, so
+      state per key is bounded.
+
+    State expires on an EVENT-time timeout, ``state_ttl`` past the
+    newest buffered frame. With a processing-time timeout the engine
+    keeps scheduling timeout-check batches on the wall clock, so an
+    availableNow drain over a finite lake would never finish; an
+    event-time timeout is driven by the watermark and lets it stop.
+    """
+    ttl_ms = _duration_ms(state_ttl)
+    out_cols = ["region", out_ts, out_name]
+
+    def step(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()
+            return
+        ts_list, val_list, em_list = (
+            map(list, state.get) if state.exists else ([], [], [])
+        )
+        rows = []
+        for pdf in pdfs:
+            for r in pdf.sort_values(ts_col).itertuples(index=False):
+                ts_us = int(pd.Timestamp(getattr(r, ts_col)).value // 1000)
+                idx = bisect.bisect_left(ts_list, ts_us)
+                ts_list.insert(idx, ts_us)
+                val_list.insert(idx, float(getattr(r, value_col)))
+                em_list.insert(idx, False)
+                for j in range(max(idx, min_len - 1), len(ts_list)):
+                    if not em_list[j]:
+                        window = val_list[max(0, j + 1 - size) : j + 1]
+                        end = pd.Timestamp(ts_list[j] * 1000)
+                        rows.append((key[0], end, emit(window)))
+                        em_list[j] = True
+                if len(ts_list) > size:
+                    drop = len(ts_list) - size
+                    del ts_list[:drop], val_list[:drop], em_list[:drop]
+        state.update((ts_list, val_list, em_list))
+        if ts_list:
+            state.setTimeoutTimestamp(ts_list[-1] // 1000 + ttl_ms)
+        if rows:
+            yield pd.DataFrame(rows, columns=out_cols)
+
+    return stream.withWatermark(ts_col, watermark).groupBy(
+        "region"
+    ).applyInPandasWithState(
+        step,
+        outputStructType=f"region string, {out_ts} timestamp, {out_name} {out_type}",
+        stateStructType=_BUFFER_STATE,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+
+
 def stateful_sequence_assembly(
     stream: DataFrame,
     n_past: int = 4,
@@ -111,105 +217,19 @@ def stateful_sequence_assembly(
     state_ttl: str = "24 hours",
     watermark: str = "24 hours",
 ) -> DataFrame:
-    """Custom stateful operator: per-region rolling buffer of the last
-    ``n_past`` frame aggregates, emitting a completed predictor window
-    per arriving frame (``applyInPandasWithState``). State is bounded
-    (n_past rows per key) and expired on EVENT-time timeout: a key's
-    state dies when the watermark passes ``state_ttl`` beyond its last
-    frame ≈ the previous-day fallback tolerance (datasets.py:430-435)
-    — the streaming twin of ``window_past_sequence``.
-
-    Event-time (not processing-time) timeout is deliberate: with
-    processing-time timeouts the engine must keep scheduling
-    timeout-check batches on the wall clock, so an availableNow /
-    processAllAvailable run over a finite lake never terminates; with
-    event-time timeouts expiry is driven by the watermark and the
-    query drains and stops.
+    """Per-region predictor windows, the streaming twin of
+    ``window_past_sequence``: every frame that completes an
+    ``n_past``-frame event-time window emits that window as
+    ``seq_values``, ending at ``seq_end_ts``. An event-time buffer with
+    ``size = min_len = n_past``; the default TTL matches the
+    previous-day fallback tolerance (datasets.py:430-435).
 
     Expects a pre-aggregated per-(region, ts) frame stream (one row
     per frame), e.g. ``groupBy(region, ts).agg(avg(value))``.
     """
-    ttl_ms = _duration_ms(state_ttl)
-    out_schema = StructType.fromJson(
-        {
-            "type": "struct",
-            "fields": [
-                {"name": "region", "type": "string", "nullable": True, "metadata": {}},
-                {"name": "seq_end_ts", "type": "timestamp", "nullable": True, "metadata": {}},
-                {"name": "seq_values", "type": {"type": "array", "elementType": "double", "containsNull": True}, "nullable": True, "metadata": {}},
-            ],
-        }
-    )
-    state_schema = StructType.fromJson(
-        {
-            "type": "struct",
-            "fields": [
-                {"name": "ts_list", "type": {"type": "array", "elementType": "long", "containsNull": True}, "nullable": True, "metadata": {}},
-                {"name": "val_list", "type": {"type": "array", "elementType": "double", "containsNull": True}, "nullable": True, "metadata": {}},
-                {"name": "em_list", "type": {"type": "array", "elementType": "boolean", "containsNull": True}, "nullable": True, "metadata": {}},
-            ],
-        }
-    )
-
-    def assemble(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import bisect
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        ts_list, val_list, em_list = state.get if state.exists else ([], [], [])
-        ts_list, val_list, em_list = list(ts_list), list(val_list), list(em_list)
-        rows = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
-            for r in pdf.itertuples(index=False):
-                ts_us = int(pd.Timestamp(getattr(r, ts_col)).value // 1000)
-                # insert in EVENT-time order: a late frame (inside the
-                # watermark) lands at its true position, so emitted
-                # windows are always time-ordered and end at the
-                # arriving frame — never a buffer in arrival order
-                idx = bisect.bisect_left(ts_list, ts_us)
-                ts_list.insert(idx, ts_us)
-                val_list.insert(idx, float(getattr(r, value_col)))
-                em_list.insert(idx, False)
-                # an interior insert (gap fill) can complete windows
-                # ending at ALREADY-buffered later frames, not just the
-                # window ending at the arriving frame — scan forward
-                # and emit every complete, not-yet-emitted window
-                # (append mode: first complete emission wins, no
-                # retraction of earlier windows over the same tail)
-                for j in range(max(idx, n_past - 1), len(ts_list)):
-                    if not em_list[j]:
-                        rows.append(
-                            {
-                                "region": key[0],
-                                "seq_end_ts": pd.Timestamp(ts_list[j] * 1000),
-                                "seq_values": list(val_list[j + 1 - n_past : j + 1]),
-                            }
-                        )
-                        em_list[j] = True
-                if len(ts_list) > n_past:
-                    drop = len(ts_list) - n_past
-                    ts_list = ts_list[drop:]
-                    val_list = val_list[drop:]
-                    em_list = em_list[drop:]
-        state.update((ts_list, val_list, em_list))
-        if ts_list:
-            # expire when the watermark passes last_frame + TTL
-            state.setTimeoutTimestamp(ts_list[-1] // 1000 + ttl_ms)
-        if rows:
-            yield pd.DataFrame(rows)
-
-    return stream.withWatermark(ts_col, watermark).groupBy(
-        "region"
-    ).applyInPandasWithState(
-        assemble,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _event_time_buffer(
+        stream, ts_col, value_col, n_past, n_past, list,
+        "seq_end_ts", "seq_values", "array<double>", state_ttl, watermark,
     )
 
 
@@ -222,100 +242,28 @@ def ewma_stream(
     watermark: str = "24 hours",
     state_ttl: str = "48 hours",
 ) -> DataFrame:
-    """Streaming EWMA per region — the live twin of
-    ``operators.windows.ewma``: each arriving frame emits the
+    """Streaming EWMA per region, the live twin of
+    ``operators.windows.ewma``: every frame emits ``raw_ewma``, the
     exponentially weighted average of the last ``lookback`` frames in
-    EVENT-time order, head renormalized over the available prefix.
+    event-time order, head renormalized over the available prefix. An
+    event-time buffer with ``size = lookback`` and ``min_len = 1``.
 
-    Same state discipline as ``stateful_sequence_assembly``: a
-    per-region buffer of the last ``lookback`` frames kept sorted by
-    event time (late frames inside the watermark insert at their true
-    position and trigger emission for every later not-yet-emitted
-    frame), append-mode emit-once (no retraction of already-emitted
-    scores when a later-arriving interior frame would have changed
-    them — first emission wins), event-time TTL so a finite
-    availableNow drain terminates. The arithmetic mirrors the batch
-    lag-chain term-for-term (sequential k = 0..lookback−1
-    accumulation), so a deterministic in-order drain is bit-identical
-    to the batch SQL before the shared 6-decimal round.
+    The sum runs k = 0, 1, … from the newest frame, term for term as
+    the batch lag chain accumulates, so an in-order drain is
+    bit-identical to the batch SQL before the shared 6-decimal round.
     """
-    ttl_ms = _duration_ms(state_ttl)
-    out_schema = StructType.fromJson(
-        {
-            "type": "struct",
-            "fields": [
-                {"name": "region", "type": "string", "nullable": True, "metadata": {}},
-                {"name": "ts", "type": "timestamp", "nullable": True, "metadata": {}},
-                {"name": "raw_ewma", "type": "double", "nullable": True, "metadata": {}},
-            ],
-        }
-    )
-    state_schema = StructType.fromJson(
-        {
-            "type": "struct",
-            "fields": [
-                {"name": "ts_list", "type": {"type": "array", "elementType": "long", "containsNull": True}, "nullable": True, "metadata": {}},
-                {"name": "val_list", "type": {"type": "array", "elementType": "double", "containsNull": True}, "nullable": True, "metadata": {}},
-                {"name": "em_list", "type": {"type": "array", "elementType": "boolean", "containsNull": True}, "nullable": True, "metadata": {}},
-            ],
-        }
-    )
 
-    def score(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import bisect
+    def ewma(window: list[float]) -> float:
+        num, den = 0.0, 0.0
+        for k, v in enumerate(reversed(window)):
+            w = alpha**k
+            num += v * w
+            den += w
+        return num / den
 
-        if state.hasTimedOut:
-            state.remove()
-            return
-        ts_list, val_list, em_list = state.get if state.exists else ([], [], [])
-        ts_list, val_list, em_list = list(ts_list), list(val_list), list(em_list)
-        rows = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
-            for r in pdf.itertuples(index=False):
-                ts_us = int(pd.Timestamp(getattr(r, ts_col)).value // 1000)
-                idx = bisect.bisect_left(ts_list, ts_us)
-                ts_list.insert(idx, ts_us)
-                val_list.insert(idx, float(getattr(r, value_col)))
-                em_list.insert(idx, False)
-                for j in range(idx, len(ts_list)):
-                    if em_list[j]:
-                        continue
-                    # mirror the batch lag-chain accumulation order
-                    num, den = 0.0, 0.0
-                    for k in range(min(lookback, j + 1)):
-                        w = alpha**k
-                        num += val_list[j - k] * w
-                        den += w
-                    rows.append(
-                        {
-                            "region": key[0],
-                            "ts": pd.Timestamp(ts_list[j] * 1000),
-                            "raw_ewma": num / den,
-                        }
-                    )
-                    em_list[j] = True
-                if len(ts_list) > lookback:
-                    drop = len(ts_list) - lookback
-                    ts_list = ts_list[drop:]
-                    val_list = val_list[drop:]
-                    em_list = em_list[drop:]
-        state.update((ts_list, val_list, em_list))
-        if ts_list:
-            state.setTimeoutTimestamp(ts_list[-1] // 1000 + ttl_ms)
-        if rows:
-            yield pd.DataFrame(rows)
-
-    return stream.withWatermark(ts_col, watermark).groupBy(
-        "region"
-    ).applyInPandasWithState(
-        score,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _event_time_buffer(
+        stream, ts_col, value_col, lookback, 1, ewma,
+        "ts", "raw_ewma", "double", state_ttl, watermark,
     )
 
 
@@ -377,6 +325,121 @@ def enrich_with_static(
     return stream.join(F.broadcast(static), on=on, how="inner")
 
 
+def drain(writer: DataStreamWriter) -> None:
+    """Run ``writer`` as an availableNow query over everything
+    currently in its source, then stop it.
+
+    ``processAllAvailable`` + ``stop`` instead of ``awaitTermination``:
+    a stateful query with a timeout pending never self-terminates under
+    availableNow, so a plain ``awaitTermination`` would burn its whole
+    timeout budget on every run. A failed micro-batch re-raises from
+    ``processAllAvailable``; ``stop`` runs in a ``finally`` so the query
+    never outlives the call.
+    """
+    q = writer.trigger(availableNow=True).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def _hadoop_path(sess: SparkSession, path: str) -> tuple:
+    """``(FileSystem, Path)`` for ``path`` under the session's Hadoop
+    configuration."""
+    p = sess._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(sess._jsc.hadoopConfiguration()), p
+
+
+def _committed(sess: SparkSession, *dirs: str) -> bool:
+    """Whether every one of a micro-batch's output ``dirs`` holds its
+    ``_SUCCESS`` marker, i.e. the batch is fully committed and a replay
+    may skip it. A batch with any output uncommitted runs again."""
+    for d in dirs:
+        fs, p = _hadoop_path(sess, os.path.join(d, "_SUCCESS"))
+        if not fs.exists(p):
+            return False
+    return True
+
+
+def _index_probe_ingest(
+    spark: SparkSession,
+    src: str,
+    schema: StructType,
+    index_dir: str,
+    matches_dir: str,
+    ckpt_dir: str,
+    build: Callable[[DataFrame], tuple[DataFrame, DataFrame]],
+    key_cols: Sequence[str],
+    id_col: str,
+) -> None:
+    """Incremental self-join of a document stream through a persisted
+    key index. ``build(batch_df)`` returns the batch's index rows
+    (``key_cols`` plus ``id_col``) and its within-batch pairs
+    (``id_a``, ``id_b``). Each micro-batch N then
+
+    (a) probes, on ``key_cols``, the index shards of EARLIER batches
+        only (``index_dir/batch_id=K``, K < N). A replay therefore
+        probes neither its own half-written keys nor the shards of
+        batches that ran after it, whose pairs with this batch are
+        already in their own matches;
+    (b) writes the distinct union of both pair sets, cross pairs as
+        (least, greatest) ids, to ``matches_dir/batch_id=N``;
+    (c) only then writes its keys as ``index_dir/batch_id=N``.
+
+    The drained pair set is BATCH-INVARIANT: a pair is found within a
+    batch or through the probe, whichever arrival order produced, so
+    it equals the one-shot self-join however arrivals were chunked.
+    Per batch the cost is the batch's own keys plus an equi-probe of
+    matching index keys; the accumulated corpus is never re-scanned.
+
+    Exactly-once under at-least-once replay: both writes overwrite
+    ``batch_id=N`` paths, and a batch is skipped only when both are
+    committed. Prior shards are listed and read directly, never by
+    swallowing a failed read, so a corrupt shard fails the batch
+    instead of silently dropping cross-batch pairs. The keys are
+    persisted for the probe and both writes and released in a
+    ``finally``, so a failed batch does not leak its cached frame.
+    """
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        sess = batch_df.sparkSession
+        shard = f"batch_id={batch_id}"
+        out_matches = os.path.join(matches_dir, shard)
+        out_index = os.path.join(index_dir, shard)
+        if _committed(sess, out_matches, out_index):
+            return
+        keys, matches = build(batch_df)
+        keys = keys.persist()
+        try:
+            fs, glob = _hadoop_path(sess, os.path.join(index_dir, "batch_id=*"))
+            prior = [
+                st.getPath().toString()
+                for st in fs.globStatus(glob) or []
+                if int(st.getPath().getName().split("=", 1)[1]) < batch_id
+            ]
+            if prior:
+                n, o = F.col(f"n.{id_col}"), F.col(f"o.{id_col}")
+                cross = (
+                    keys.alias("n")
+                    .join(sess.read.parquet(*prior).alias("o"), on=list(key_cols))
+                    .select(
+                        F.least(n, o).alias("id_a"), F.greatest(n, o).alias("id_b")
+                    )
+                    .where(F.col("id_a") != F.col("id_b"))
+                )
+                matches = matches.unionByName(cross)
+            matches.distinct().write.mode("overwrite").parquet(out_matches)
+            keys.write.mode("overwrite").parquet(out_index)
+        finally:
+            keys.unpersist()
+
+    drain(
+        frame_stream(spark, src, schema)
+        .writeStream.foreachBatch(process)
+        .option("checkpointLocation", ckpt_dir)
+    )
+
+
 def lsh_ingest(
     spark: SparkSession,
     src: str,
@@ -385,91 +448,59 @@ def lsh_ingest(
     matches_dir: str,
     ckpt_dir: str,
 ) -> None:
-    """Incremental near-dup ingest as a stream: each arriving
-    micro-batch of documents (a) pairs within itself, (b) probes the
-    PERSISTED band index built from everything ingested before it,
-    then (c) appends its own banded MinHash keys to that index —
-    ``sink_lsh_index``'s lifecycle driven by Structured Streaming
-    ``foreachBatch`` instead of a manual job per corpus drop.
-
-    The emitted pair set is BATCH-INVARIANT: a colliding pair is
-    found within a batch or across the index probe, whichever ingest
-    order produced — so the drained result equals the one-shot batch
-    LSH join no matter how arrivals were chunked (that identity is
-    the oracle). At lake scale the per-batch cost is the batch's own
-    bands plus an equi-probe of matching index keys — never a re-scan
-    of the accumulated corpus.
-
-    Exactly-once under at-least-once replay: each batch writes to
-    ``batch_id=N`` hive subdirs with overwrite — a replayed batch
-    (Structured Streaming re-runs foreachBatch after a failure)
-    either skips (both outputs already committed) or rewrites its own
-    subpaths, never duplicating bands or pairs. The index read checks
-    path existence explicitly instead of swallowing exceptions, so a
-    corrupt or half-written index FAILS the batch (and the retry
-    re-resolves it) rather than silently dropping cross-batch pairs.
-    """
-    import os
-
-    from pyspark.sql import functions as F
-
+    """Incremental near-dup ingest, the live form of
+    ``sink_lsh_index``: documents arrive in micro-batches and are
+    paired through a persisted MinHash band index. The index rows are
+    the batch's ``(doc_id, band_idx, band_key)`` bands, probed on
+    ``(band_idx, band_key)``; the within-batch pairs are
+    ``lsh_candidate_pairs`` of the batch. The drained pair set equals
+    the one-shot batch LSH join (see ``_index_probe_ingest``)."""
     from weather4cast_bigdata_spark.operators import dedup
 
-    def _hadoop_exists(sess: SparkSession, path: str) -> bool:
-        jvm = sess._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(sess._jsc.hadoopConfiguration())
-        return bool(fs.exists(p))
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        out_matches = os.path.join(matches_dir, f"batch_id={batch_id}")
-        out_index = os.path.join(index_dir, f"batch_id={batch_id}")
-        done_m = os.path.join(out_matches, "_SUCCESS")
-        done_i = os.path.join(out_index, "_SUCCESS")
-        if _hadoop_exists(sess, done_m) and _hadoop_exists(sess, done_i):
-            return  # replayed batch: both outputs already committed
+    def build(batch_df: DataFrame) -> tuple[DataFrame, DataFrame]:
         sig = dedup.minhash_signatures_docs(batch_df)
-        bands = dedup.banded_signatures(sig).persist()
-        matches = dedup.lsh_candidate_pairs(sig)
-        # Prior-batch index shards are batch_id=K siblings of this
-        # batch's own (possibly half-written, pre-_SUCCESS) subdir —
-        # exclude self so a replay never probes its own partial bands.
-        jvm = sess._jvm
-        glob = jvm.org.apache.hadoop.fs.Path(
-            os.path.join(index_dir, "batch_id=*")
-        )
-        fs = glob.getFileSystem(sess._jsc.hadoopConfiguration())
-        prior = [
-            st.getPath().toString()
-            for st in fs.globStatus(glob) or []
-            if st.getPath().getName() != f"batch_id={batch_id}"
-        ]
-        if prior:
-            idx = sess.read.parquet(*prior)
-            cross = (
-                bands.alias("n")
-                .join(idx.alias("o"), on=["band_idx", "band_key"])
-                .select(
-                    F.least("n.doc_id", "o.doc_id").alias("id_a"),
-                    F.greatest("n.doc_id", "o.doc_id").alias("id_b"),
-                )
-                .where(F.col("id_a") != F.col("id_b"))
-            )
-            matches = matches.unionByName(cross)
-        matches.distinct().write.mode("overwrite").parquet(out_matches)
-        bands.write.mode("overwrite").parquet(out_index)
-        bands.unpersist()
+        return dedup.banded_signatures(sig), dedup.lsh_candidate_pairs(sig)
 
-    q = (
-        frame_stream(spark, src, schema)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
+    _index_probe_ingest(
+        spark, src, schema, index_dir, matches_dir, ckpt_dir,
+        build, ("band_idx", "band_key"), "doc_id",
     )
-    q.processAllAvailable()
-    q.stop()
+
+
+def exact_dedup_ingest(
+    spark: SparkSession,
+    src: str,
+    schema: StructType,
+    index_dir: str,
+    matches_dir: str,
+    ckpt_dir: str,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> None:
+    """Incremental EXACT dedup, the md5 twin of :func:`lsh_ingest` and
+    the live form of ``sink_exact_dedup_index``: the index rows are the
+    batch's ``(text_hash, id)`` pairs, probed on ``text_hash``; the
+    within-batch pairs are the batch's own hash self-join. The drained
+    pair set equals the one-shot exact self-join (see
+    ``_index_probe_ingest``)."""
+
+    def build(batch_df: DataFrame) -> tuple[DataFrame, DataFrame]:
+        hashed = batch_df.select(
+            F.md5(F.col(text_col)).alias("text_hash"), F.col(id_col)
+        )
+        x, y = F.col(f"x.{id_col}"), F.col(f"y.{id_col}")
+        within = (
+            hashed.alias("x")
+            .join(hashed.alias("y"), on="text_hash")
+            .where(x < y)
+            .select(x.alias("id_a"), y.alias("id_b"))
+        )
+        return hashed, within
+
+    _index_probe_ingest(
+        spark, src, schema, index_dir, matches_dir, ckpt_dir,
+        build, ("text_hash",), id_col,
+    )
 
 
 def submission_ingest(
@@ -499,66 +530,46 @@ def submission_ingest(
     group's file was last rewritten by the final batch that touched
     it, from the complete staged cell set — so the drained file tree
     is BATCH-INVARIANT: byte-identical to the one-shot batch export
-    regardless of how arrivals were chunked (that identity is the
-    oracle; tests pin it plus replay idempotence).
+    regardless of how arrivals were chunked.
 
     Exactly-once under at-least-once replay: every write is a
     deterministic overwrite of batch_id-scoped paths or of the
     group's own file, so a replayed batch rewrites identical bytes;
-    fully-committed batches (staging AND manifest ``_SUCCESS``) skip
-    outright.
+    a batch is skipped only when staging AND manifest are committed.
     """
-    import os
     from urllib.parse import unquote
 
     from weather4cast_bigdata_spark.sources import hdf5
-
-    def _exists(sess: SparkSession, path: str) -> bool:
-        jvm = sess._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(sess._jsc.hadoopConfiguration())
-        return bool(fs.exists(p))
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
         stage = os.path.join(staging_dir, f"batch_id={batch_id}")
         mani = os.path.join(manifest_dir, f"batch_id={batch_id}")
-        if _exists(sess, os.path.join(stage, "_SUCCESS")) and _exists(
-            sess, os.path.join(mani, "_SUCCESS")
-        ):
-            return  # replayed, fully committed batch
+        if _committed(sess, stage, mani):
+            return
         (
             batch_df.write.partitionBy("region", "day")
             .mode("overwrite")
             .parquet(stage)
         )
-        # Touched groups this batch, recovered from the staged
-        # write's OWN directory tree: the static overwrite just
-        # materialized exactly this batch's (region, day) groups as
-        # partition directories, so one bounded two-level FS listing
-        # answers "which groups" without a second Spark job scanning
-        # batch_df (r12, guide §1.2 — the old
-        # `batch_df.select(region, day).distinct().collect()` re-read
-        # every batch row to learn what the write already knows).
-        # Listing happens after the write commits, so a replayed
-        # batch lists its own rewrite — replay/idempotence unchanged.
-        # Values round-trip through Spark's partition-path escaping
-        # (%-encoded specials; day is a bare int) via unquote.
-        jpath = sess._jvm.org.apache.hadoop.fs.Path
-        fs = jpath(stage).getFileSystem(sess._jsc.hadoopConfiguration())
-        touched = []
-        for rdir in fs.listStatus(jpath(stage)):
-            rname = rdir.getPath().getName()
-            if not (rdir.isDirectory() and rname.startswith("region=")):
-                continue
-            for ddir in fs.listStatus(rdir.getPath()):
-                dname = ddir.getPath().getName()
-                if ddir.isDirectory() and dname.startswith("day="):
-                    touched.append(
-                        (unquote(rname[len("region="):]),
-                         int(dname[len("day="):]))
-                    )
-        touched.sort()
+        # The touched groups are the staged write's own partition
+        # directories, listed after it commits, so no second Spark job
+        # scans batch_df to learn them. Values round-trip through
+        # Spark's partition-path escaping (%-encoded specials; day is a
+        # bare int) via unquote.
+        fs, stage_path = _hadoop_path(sess, stage)
+
+        def part_dirs(path, col):
+            for st in fs.listStatus(path):
+                name = st.getPath().getName()
+                if st.isDirectory() and name.startswith(f"{col}="):
+                    yield st.getPath(), unquote(name[len(col) + 1 :])
+
+        touched = sorted(
+            (region, int(day))
+            for region_path, region in part_dirs(stage_path, "region")
+            for _, day in part_dirs(region_path, "day")
+        )
         if not touched:
             # an empty (replay-tail) batch touches no files; commit an
             # empty manifest so the _SUCCESS skip still works
@@ -569,26 +580,22 @@ def submission_ingest(
         # single-root read of the staging lake: batch_id / region /
         # day all recover as hive partition columns, one listing
         staged = sess.read.parquet(staging_dir).drop("batch_id")
-        pred = None
-        for region, day in touched:
-            c = (F.col("region") == region) & (F.col("day") == day)
-            pred = c if pred is None else (pred | c)
         # equality predicates on partition columns -> partition
         # pruning: only the touched groups' staged files are read
+        pred = reduce(
+            operator.or_,
+            [(F.col("region") == r) & (F.col("day") == d) for r, d in touched],
+        )
         manifest = hdf5.write_submission_h5(
             staged.where(pred), submission_dir, list(variables), grid
         )
         manifest.write.mode("overwrite").parquet(mani)
 
-    q = (
+    drain(
         frame_stream(spark, src, schema)
         .writeStream.foreachBatch(process)
         .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.processAllAvailable()
-    q.stop()
 
 
 def submission_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
@@ -606,103 +613,3 @@ def submission_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
-
-
-def exact_dedup_ingest(
-    spark: SparkSession,
-    src: str,
-    schema: StructType,
-    index_dir: str,
-    matches_dir: str,
-    ckpt_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Incremental EXACT dedup as a stream — the md5 twin of
-    :func:`lsh_ingest` and the live form of ``sink_exact_dedup_index``:
-    each arriving micro-batch of documents (a) pairs exact duplicates
-    within itself, (b) probes the PERSISTED hash index built from
-    everything ingested before it, then (c) appends its own
-    (text_hash, id) rows to that index. The emitted pair set is
-    BATCH-INVARIANT (a duplicate pair is found within a batch or
-    across the index probe, whichever ingest order produced), so the
-    drained result equals the one-shot exact self-join however
-    arrivals were chunked — that identity is the oracle. Per-batch
-    cost is the batch's own hashes plus an equi probe of matching
-    index keys; the accumulated corpus is never re-hashed or
-    re-scanned.
-
-    Exactly-once under at-least-once replay: batch_id-subdir writes
-    with overwrite plus a both-outputs ``_SUCCESS`` skip, identical
-    to ``lsh_ingest``.
-    """
-    import os
-
-    from pyspark.sql import functions as F
-
-    def _exists(sess: SparkSession, path: str) -> bool:
-        jvm = sess._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(sess._jsc.hadoopConfiguration())
-        return bool(fs.exists(p))
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        out_matches = os.path.join(matches_dir, f"batch_id={batch_id}")
-        out_index = os.path.join(index_dir, f"batch_id={batch_id}")
-        if _exists(sess, os.path.join(out_matches, "_SUCCESS")) and _exists(
-            sess, os.path.join(out_index, "_SUCCESS")
-        ):
-            return  # replayed batch: both outputs already committed
-        hashed = batch_df.select(
-            F.md5(F.col(text_col)).alias("text_hash"), F.col(id_col)
-        ).persist()
-        within = (
-            hashed.alias("x")
-            .join(hashed.alias("y"), on="text_hash")
-            .where(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
-            .select(
-                F.col(f"x.{id_col}").alias("id_a"),
-                F.col(f"y.{id_col}").alias("id_b"),
-            )
-        )
-        jvm = sess._jvm
-        glob = jvm.org.apache.hadoop.fs.Path(
-            os.path.join(index_dir, "batch_id=*")
-        )
-        fs = glob.getFileSystem(sess._jsc.hadoopConfiguration())
-        prior = [
-            st.getPath().toString()
-            for st in fs.globStatus(glob) or []
-            if st.getPath().getName() != f"batch_id={batch_id}"
-        ]
-        matches = within
-        if prior:
-            idx = sess.read.parquet(*prior)
-            cross = (
-                hashed.alias("n")
-                .join(idx.alias("o"), on="text_hash")
-                .select(
-                    F.least(
-                        F.col(f"n.{id_col}"), F.col(f"o.{id_col}")
-                    ).alias("id_a"),
-                    F.greatest(
-                        F.col(f"n.{id_col}"), F.col(f"o.{id_col}")
-                    ).alias("id_b"),
-                )
-                .where(F.col("id_a") != F.col("id_b"))
-            )
-            matches = matches.unionByName(cross)
-        matches.distinct().write.mode("overwrite").parquet(out_matches)
-        hashed.write.mode("overwrite").parquet(out_index)
-        hashed.unpersist()
-
-    q = (
-        frame_stream(spark, src, schema)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
