@@ -608,6 +608,84 @@ def test_aqe_skew_join_splits_hot_partition_at_runtime(spark):
                 spark.conf.set(k, v)
 
 
+def test_persisted_python_stage_is_coalesced(spark):
+    """A persisted ``groupBy`` -> ``mapInPandas`` plan is re-planned by
+    AQE like any other query: its shuffle read is coalesced below
+    ``shuffle.partitions``, so the Python stage above it does not run
+    one near-empty task per shuffle partition, and the cached rows
+    equal the unpersisted result."""
+
+    def doubled(batches):
+        for pdf in batches:
+            pdf["s2"] = pdf["s"] * 2
+            yield pdf
+
+    def frame():
+        sums = spark.range(0, 5_000).groupBy((F.col("id") % 50).alias("k")).agg(
+            F.sum("id").alias("s")
+        )
+        return sums.mapInPandas(doubled, "k long, s long, s2 long")
+
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    out = frame()
+    try:
+        want = sorted(map(tuple, frame().collect()))
+        out.persist()
+        out.count()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryRelation" in plan
+        assert "AQEShuffleRead coalesced" in plan, plan
+        assert out.rdd.getNumPartitions() < 64
+        assert sorted(map(tuple, out.collect())) == want
+    finally:
+        out.unpersist()
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "curation_pipeline",
+        "sim_lsh_multiprobe",
+        "dedup_embedding_cosine",
+        "cache_decoded",
+        "streaming_lsh_ingest",
+    ],
+)
+def test_cached_plan_coalescing_keeps_results(spark, sf_dir, name):
+    """Letting AQE re-plan persisted plans moves only partitioning:
+    the curation, LSH, embedding-dedup, decode-cache and streaming
+    ingest queries give the same rows (``testing.digest_exprs``) with
+    ``canChangeCachedPlanOutputPartitioning`` on and off. The cache
+    is cleared before each side, so neither reads a frame the other
+    persisted."""
+    from weather4cast_bigdata_spark.plans.registry import REGISTRY
+    from weather4cast_bigdata_spark.session import DEFAULT_SHUFFLE_PARTITIONS
+    from weather4cast_bigdata_spark.testing import digest_exprs
+
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    saved = {k: spark.conf.get(k) for k in (key, "spark.sql.shuffle.partitions")}
+    spark.conf.set("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
+    digests = {}
+    try:
+        for flag in ("false", "true"):
+            spark.conf.set(key, flag)
+            spark.catalog.clearCache()
+            df = REGISTRY[name].fn(spark, sf_dir)
+            sel, _ = digest_exprs(df.schema)
+            df.createOrReplaceTempView("_cached_plan_digest")
+            digests[flag] = tuple(
+                spark.sql(f"SELECT {sel} FROM _cached_plan_digest").collect()[0]
+            )
+    finally:
+        spark.catalog.clearCache()
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert digests["true"][0] > 0
+    assert digests["true"] == digests["false"]
+
+
 def test_adaptive_n_planes_python_sql_agree():
     """The scale-adaptive LSH resolution must be derived identically
     by the Spark plan (integer while-loop) and the DuckDB oracle

@@ -5,6 +5,7 @@ day boundaries, quantization round-trip, ridge recovery."""
 from __future__ import annotations
 
 import math
+import re
 
 import numpy as np
 import pytest
@@ -86,6 +87,33 @@ def test_attach_static(fx, decoded):
     ).collect()[0]
     assert 0.0 <= row[0] and row[1] <= 1.0
     assert row[2] == 0.0 and row[3] == 1.0  # clamped and max-scaled
+
+
+def test_attach_static_reads_static_grid_once(spark, fx, decoded, tmp_path):
+    """The global elevation max comes from the static grid's own
+    branch, so the grid is read once (the scan leaf appears once in
+    the optimized plan), and ``elev_norm`` equals
+    ``max(e, 0) / max(max(e, 0))`` exactly, negative elevations
+    included."""
+    path = str(tmp_path / "static")
+    fx["static_grid"].write.parquet(path)
+    static = spark.read.parquet(path)
+    out = weather.attach_static(decoded, static)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"Relation \[[^\]]*\] parquet", plan)) == 1, plan
+
+    pdf = wf.static_grid_pdf()
+    assert (pdf["elevation"] < 0).any()
+    clamped = pdf["elevation"].clip(lower=0.0)
+    want = {
+        (r, int(y), int(x)): v
+        for r, y, x, v in zip(pdf["region"], pdf["y"], pdf["x"], clamped / clamped.max())
+    }
+    got = {
+        (r["region"], r["y"], r["x"]): r["elev_norm"]
+        for r in out.select("region", "y", "x", "elev_norm").distinct().collect()
+    }
+    assert got and all(got[k] == want[k] for k in got)
 
 
 def test_ridge_recovers_known_weights(fx):

@@ -11,7 +11,7 @@ names, so the same plans run on the real 256×256 lake.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from weather4cast_bigdata_spark.functions import scalar
@@ -95,19 +95,21 @@ def valid_start_times(frames: DataFrame, n_slots: int = 36) -> DataFrame:
 def attach_static(frames: DataFrame, static_grid: DataFrame) -> DataFrame:
     """Broadcast-join per-pixel static channels with the reference's
     geo normalizations (datasets.py:142-149): lon←(lon+76)/152,
-    lat←(lat−23)/63, elevation clamped and globally max-scaled."""
+    lat←(lat−23)/63, elevation clamped and globally max-scaled.
+
+    The global max rides an unpartitioned window over the tiny dim
+    table: a separate aggregate cross-joined back would be a second
+    branch over ``static_grid`` and decode it twice (Catalyst does not
+    dedupe common subtrees)."""
+    elev = scalar.clamp_nonneg(F.col("elevation"))
     g = static_grid.select(
         "region",
         "y",
         "x",
         scalar.affine(F.col("longitude"), 76.0, 152.0).alias("lon_norm"),
         scalar.affine(F.col("latitude"), -23.0, 63.0).alias("lat_norm"),
-        scalar.clamp_nonneg(F.col("elevation")).alias("elev_clamped"),
+        (elev / F.max(elev).over(Window.partitionBy())).alias("elev_norm"),
     )
-    gmax = g.agg(F.max("elev_clamped").alias("elev_max"))
-    g = g.crossJoin(F.broadcast(gmax)).withColumn(
-        "elev_norm", F.col("elev_clamped") / F.col("elev_max")
-    ).drop("elev_clamped", "elev_max")
     return joins.join_static_broadcast(frames, g, on=["region", "y", "x"])
 
 
