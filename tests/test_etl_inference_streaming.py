@@ -56,6 +56,98 @@ def test_scan_and_decode(spark, fake_lake):
     )
 
 
+def _frame_lake(root, n_times: int = 10) -> str:
+    """2 regions x 2 products x ``n_times`` frames: more files than
+    Spark's parallel-listing threshold (32 roots)."""
+    for region in ("R1", "R2"):
+        for product in ("CTTH", "CRR"):
+            d = root / "w4c" / region / "training" / "2019204" / product
+            d.mkdir(parents=True, exist_ok=True)
+            for t in range(n_times):
+                hh, mm = divmod(6 * 60 + 15 * t, 60)
+                name = f"S_NWC_{product}_MSG4_{region}-VISIR_20190723T{hh:02d}{mm:02d}00Z.nc"
+                (d / name).write_bytes(os.urandom(64))
+    return str(root)
+
+
+def _scan_rows(df):
+    return sorted(
+        tuple(r) for r in df.select("path", "region", "subset", "product", "filename", "ts").collect()
+    )
+
+
+def test_scan_lists_lake_by_directory(spark, tmp_path):
+    """``scan_frame_files`` lists the product directories (no Spark
+    listing job while the DataFrame is built, even above the 32-root
+    parallel-listing threshold) and returns the same rows as a plain
+    ``binaryFile`` glob load through the same projection."""
+    from weather4cast_bigdata_spark.functions.strings import parse_filename_ts
+
+    lake = _frame_lake(tmp_path)
+    glob = f"{lake}/w4c/*/*/*/*/*.nc"
+    sc = spark.sparkContext._jsc.sc()
+
+    def last_job_id():
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None).iterator()
+        ids = [jobs.next().jobId() for _ in iter(jobs.hasNext, False)]
+        return max(ids, default=-1)
+
+    before = last_job_id()
+    scanned = netcdf.scan_frame_files(spark, glob)
+    assert last_job_id() == before
+
+    name = F.regexp_extract("path", netcdf.FRAME_PATH_RE, 5)
+    plain = spark.read.format("binaryFile").load(glob).select(
+        F.col("path"),
+        F.regexp_extract("path", netcdf.FRAME_PATH_RE, 1).alias("region"),
+        F.regexp_extract("path", netcdf.FRAME_PATH_RE, 2).alias("subset"),
+        F.regexp_extract("path", netcdf.FRAME_PATH_RE, 4).alias("product"),
+        name.alias("filename"),
+        parse_filename_ts(name).alias("ts"),
+    )
+    got = _scan_rows(scanned)
+    assert len(got) == 40
+    assert got == _scan_rows(plain)
+
+
+def test_scan_skips_stray_files(spark, tmp_path):
+    """A ``README.nc`` in a product directory, a non-``.nc`` file, a
+    frame-named file at product-directory depth and a directory named
+    ``*.nc`` are skipped: the scan returns exactly the clean lake's
+    rows and the valid start times do not change (a ``README.nc``
+    once failed the whole scan on its unparseable timestamp)."""
+    from weather4cast_bigdata_spark.plans import weather
+
+    clean = _frame_lake(tmp_path / "clean")
+    dirty = _frame_lake(tmp_path / "dirty")
+    day = os.path.join(dirty, "w4c", "R1", "training", "2019204")
+    frame = "S_NWC_CTTH_MSG4_R1-VISIR_20190723T060000Z.nc"
+    with open(os.path.join(day, "CTTH", "README.nc"), "w") as f:
+        f.write("not a frame")
+    with open(os.path.join(day, "CRR", "notes.txt"), "w") as f:
+        f.write("not a frame")
+    with open(os.path.join(day, frame), "wb") as f:
+        f.write(os.urandom(64))
+    os.makedirs(os.path.join(day, "CTTH", "extra.nc"))
+    with open(os.path.join(day, "CTTH", "extra.nc", frame), "wb") as f:
+        f.write(os.urandom(64))
+
+    def scan(lake):
+        return netcdf.scan_frame_files(spark, f"{lake}/w4c/*/*/*/*/*.nc")
+
+    def rows(lake):
+        return [r[1:] for r in _scan_rows(scan(lake))]
+
+    def starts(lake):
+        return sorted(map(tuple, weather.valid_start_times(scan(lake), n_slots=4).collect()))
+
+    assert rows(dirty) == rows(clean)
+    assert len(rows(clean)) == 40
+    assert starts(dirty) == starts(clean)
+    assert len(starts(clean)) == 2 * 7
+
+
 def test_etl_partitioned_sink(spark, fake_lake, tmp_path):
     scanned = netcdf.scan_frame_files(spark, f"{fake_lake}/w4c/*/*/*/*/*.nc")
     decoded = netcdf.decode_frames(scanned, {"CTTH": ["temperature"]}, grid=(4, 4))

@@ -686,6 +686,34 @@ def test_cached_plan_coalescing_keeps_results(spark, sf_dir, name):
     assert digests["true"] == digests["false"]
 
 
+def test_generated_classes_compile_once_per_session(spark):
+    """A session's codegen cache holds more than Spark's default 100
+    classes: 110 projections that differ only in a numeric literal
+    (eleven unions of ten, each projection its own whole-stage class)
+    generate their own classes; running the set a second time
+    compiles nothing (``CodegenMetrics`` counts every Janino compile)
+    instead of missing the LRU on every lookup."""
+    from functools import reduce
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    one = spark.range(0, 1, 1, 1)
+    queries = [
+        reduce(
+            lambda a, b: a.unionAll(b),
+            [one.select((F.col("id") * k + k).alias("v")) for k in range(j, j + 10)],
+        )
+        for j in range(0, 110, 10)
+    ]
+    grew = []
+    for _ in range(2):
+        before = compiles.getCount()
+        got = sorted(r["v"] for q in queries for r in q.collect())
+        grew.append(compiles.getCount() - before)
+        assert got == list(range(110))
+    assert grew[0] > 100
+    assert grew[1] == 0
+
+
 def test_adaptive_n_planes_python_sql_agree():
     """The scale-adaptive LSH resolution must be derived identically
     by the Spark plan (integer while-loop) and the DuckDB oracle

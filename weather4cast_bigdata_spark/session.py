@@ -14,6 +14,19 @@ but every setting here is chosen to survive a 1000-executor cluster on
   on all ``shuffle.partitions`` near-empty tasks. At real scale the
   partitions are MB-sized and the coalesce changes nothing; AQE never
   coalesces an explicit-count ``repartition(n, ...)``.
+- Generated-code cache sized to a pass's working set
+  (``codegen.cache.maxEntries``). Spark compiles each whole-stage and
+  expression class with Janino and keeps it in an LRU keyed by its
+  source. One steady pass of the submit path generates ~165 distinct
+  classes and one pass of the curation/vector path ~190-200, both
+  above the default 100 entries, so every lookup in the next pass
+  missed. A miss is a Janino compile, a fresh class load, and then the
+  JIT compiling that class's hot methods again. 1000 entries hold one
+  pass of both with headroom, so a long-lived session compiles each
+  class once. Measured on a 4-CPU machine: 164 -> 4-18 compiles per
+  steady submit pass, JIT-thread CPU 7.2 -> 5.1 s per pass. The conf
+  is static: the cache is JVM-wide and reads it once, at the first
+  compile.
 - Arrow enabled: every Python-side operator in this engine is a
   Pandas UDF / ``mapInPandas`` (never row-at-a-time Python).
 - Session timezone pinned to UTC so timestamp semantics match the
@@ -57,6 +70,7 @@ def get_spark(
         # real scale where partitions are MBs.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

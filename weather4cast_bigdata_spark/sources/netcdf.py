@@ -34,7 +34,11 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from weather4cast_bigdata_spark.functions.strings import parse_filename_ts
+from weather4cast_bigdata_spark.functions.strings import (
+    TS_FORMAT,
+    TS_PATTERN,
+    parse_filename_ts,
+)
 
 try:  # pragma: no cover - not installed in the build container
     import netCDF4  # type: ignore
@@ -72,21 +76,49 @@ DECODED_SCHEMA = StructType(
 )
 
 
+def _list_files(spark: SparkSession, path_glob: str, path_re: str) -> DataFrame:
+    """``binaryFile`` rows for ``path_glob``, listed by directory.
+
+    The glob is split at its last ``/``: the directory part is loaded
+    and the file-name part becomes ``pathGlobFilter``. Spark then lists
+    the (few) matched directories on the driver instead of handing the
+    planner one root per file; above
+    ``parallelPartitionDiscovery.threshold`` (32) roots it runs a Spark
+    job just to list them, one task per file. Listing a directory is
+    recursive and the glob's directory part can also match files, so
+    rows whose path does not match ``path_re`` are dropped here,
+    JVM-side, before any decoder sees them.
+    """
+    root, _, name_glob = path_glob.rpartition("/")
+    raw = spark.read.format("binaryFile").option("pathGlobFilter", name_glob).load(root)
+    return raw.where(F.col("path").rlike(path_re))
+
+
 def scan_frame_files(spark: SparkSession, path_glob: str) -> DataFrame:
     """binaryFile scan + partition-path parse → (path metadata, bytes).
 
     Reference: directory walk + filename timestamp parse
-    (datasets.py:26-36, 229-237). The regex runs JVM-side; only files
-    surviving any pushed filters reach the Python decoder.
+    (datasets.py:26-36, 229-237). ``path_glob`` is a file glob such as
+    ``lake/w4c/*/*/*/*/*.nc``; it is listed by directory (one listing
+    per day/product directory, see ``_list_files``). Files that do not
+    follow ``region/subset/day/product/<name>.nc`` or whose name carries
+    no parseable ``%Y%m%dT%H%M%SZ`` stamp (a ``README.nc``, a file at
+    product-directory depth, anything inside a sub-directory of a
+    product directory) are skipped. The regex and stamp filters run
+    JVM-side; only files surviving them and any pushed filters reach
+    the Python decoder.
     """
-    raw = spark.read.format("binaryFile").load(path_glob)
-    return raw.select(
+    raw = _list_files(spark, path_glob, FRAME_PATH_RE)
+    name = F.regexp_extract("path", FRAME_PATH_RE, 5)
+    return raw.where(
+        F.try_to_timestamp(F.regexp_extract(name, TS_PATTERN, 1), F.lit(TS_FORMAT)).isNotNull()
+    ).select(
         F.col("path"),
         F.regexp_extract("path", FRAME_PATH_RE, 1).alias("region"),
         F.regexp_extract("path", FRAME_PATH_RE, 2).alias("subset"),
         F.regexp_extract("path", FRAME_PATH_RE, 4).alias("product"),
-        F.regexp_extract("path", FRAME_PATH_RE, 5).alias("filename"),
-        parse_filename_ts(F.regexp_extract("path", FRAME_PATH_RE, 5)).alias("ts"),
+        name.alias("filename"),
+        parse_filename_ts(name).alias("ts"),
         F.col("content"),
     )
 
@@ -248,7 +280,7 @@ def scan_static_navigation(
     exercised with realistic values.
     """
     h, w = grid
-    raw = spark.read.format("binaryFile").load(path_glob).select(
+    raw = _list_files(spark, path_glob, NAV_PATH_RE).select(
         F.col("path"),
         F.regexp_extract("path", NAV_PATH_RE, 1).alias("region"),
         F.col("content"),
@@ -295,7 +327,7 @@ def scan_static_raw(
     involved.
     """
     h, w = grid
-    raw = spark.read.format("binaryFile").load(path_glob).select(
+    raw = _list_files(spark, path_glob, ELEV_PATH_RE).select(
         F.regexp_extract("path", ELEV_PATH_RE, 1).alias("region"),
         F.col("content"),
     )
